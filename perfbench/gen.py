@@ -27,6 +27,16 @@ POS_MOD = 1_000_000
 INV37 = pow(37, -1, POS_MOD)
 N_CHR = 25
 N_PARTS = 20_000
+# The planted hotspot. operators.skew marks a (chr, reg) bin heavy above
+# 2x the mean bin and splits it into up to 32 segments, a cap reached at
+# ~8x the mean. There are 837 bins, and each planted bin holds ~84x the
+# mean bin, so all three are split to the cap (96 groups), and 30% of the
+# reads take the split path. The share is not a straggling
+# threshold, because none exists at this size: measured on a 4-vCPU host,
+# no share up to 0.7 in one bin made the transform stage straggle even
+# with the skew pre-pass off (slowest task <= 1.2x the median, stage no
+# slower than on uniform input); per-task and per-group costs outweigh
+# per-read work there.
 HOT_REGIONS = 3
 HOT_SHARE = 0.30
 HOT_WIDTH = 19_999  # < the narrowest bin (region_size of chr 0)

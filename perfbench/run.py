@@ -3,11 +3,12 @@
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
 Run from the repository root. The seed makes the inputs (perfbench/gen.py);
-the program sees only the generated files. The session is set up SETUPS
-times, each time `session.get_spark` plus one warm-up run on the
-workload's own input; then runs repeat in a closed loop for S seconds,
-each checked against a DuckDB oracle or a closed-form answer outside its
-timed window. The last stdout line is one JSON object:
+the program sees only the generated files. The set-up is what a pipeline
+run pays at launch: `session.get_spark` in a fresh JVM plus WARMUPS runs
+on the workload's own input; setup_s is its length. Then runs repeat in
+a closed loop for S seconds, each checked against a DuckDB oracle or a
+closed-form answer outside its timed window. The last stdout line is one
+JSON object:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -22,6 +23,7 @@ per-layer ones (workloads.LAYER_METRICS). Spans are written to
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import shlex
@@ -34,8 +36,8 @@ import time
 import traceback
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-SETUPS = 3
-MIN_RUNS = 2  # a timed loop measures at least this many runs
+WARMUPS = 2  # runs in the set-up; the first in a fresh JVM takes ~4x a steady one
+MIN_RUNS = 3  # timed runs at least, so the median outvotes one slow run
 DRIVER_MEM = "2g"  # fits beside other work on a 15 GB host
 
 
@@ -59,9 +61,12 @@ def pin_env(root: str, work: str) -> dict[str, str]:
         "TMPDIR": tmp,
         # no JVM perf-data file under /tmp, for the launcher or the driver
         "SPARK_LAUNCHER_OPTS": "-XX:-UsePerfData",
-        # the heap is committed up front (-Xms = -Xmx, pre-touched), so
-        # peak_rss_mb moves with memory outside it (Python workers, Arrow
-        # and other off-heap buffers) rather than with GC sizing decisions
+        # the heap is committed up front (-Xms = -Xmx, pre-touched): left to
+        # grow, its size follows GC timing, and peak_rss_mb spread 15-25%
+        # (quartile range over median) across ten seeds. So peak_rss_mb
+        # moves with memory outside the heap (Python workers, Arrow and
+        # other off-heap buffers); the heap's use is the traced
+        # jvm.heap_live_mb
         "PYSPARK_SUBMIT_ARGS": shlex.join([
             "--conf", f"spark.driver.extraJavaOptions=-Djava.io.tmpdir={tmp} "
             f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch -XX:-UsePerfData",
@@ -91,11 +96,13 @@ class Bench:
         self.failed = 0
         self.setup_failed = False
 
-    def finish(self, spark, fn, measured: bool = True):
+    def finish(self, spark, fn, measured: bool = True, rss=None):
         """One run of fn with its check and reset; returns (wall, cpu, ok),
-        ok False if the run raised or its output was wrong."""
+        ok False if the run raised or its output was wrong. `rss` samples
+        the run only, not its check or reset."""
         c0 = self.ps.cpu_seconds()
-        wall, res, err = one_run(fn, spark)
+        with rss or contextlib.nullcontext():
+            wall, res, err = one_run(fn, spark)
         cpu = self.ps.cpu_seconds() - c0
         if err is None:
             err = self.wl.check(res)
@@ -111,30 +118,23 @@ class Bench:
         return wall, cpu, err is None
 
     def setup(self, get_spark):
-        """SETUPS times: (re)start the session and warm up with one run on
-        the workload's own input. The first set-up also launches the JVM
-        and is the slowest; the median is a restart on a warm JVM."""
-        spark, setups, starts = None, [], []
-        for _ in range(SETUPS):
-            if spark is not None:
-                spark.stop()
-            t0 = time.perf_counter()
-            spark = get_spark("perfbench")
-            starts.append(time.perf_counter() - t0)
-            wall, _, _ = self.finish(spark, self.wl.run, measured=False)
-            setups.append(starts[-1] + wall)
-        log("setup s: " + " ".join(f"{s:.3f}" for s in setups))
-        return spark, setups, starts
+        """The cold set-up: `get_spark` in a fresh JVM, then WARMUPS runs
+        on the workload's own input. Returns the session, the set-up's
+        seconds and the session start's seconds; checks and resets
+        between the warm-up runs are not counted."""
+        t0 = time.perf_counter()
+        spark = get_spark("perfbench")
+        start = time.perf_counter() - t0
+        walls = [self.finish(spark, self.wl.run, measured=False)[0] for _ in range(WARMUPS)]
+        log(f"setup s: start {start:.3f}, warm-up runs "
+            + " ".join(f"{w:.3f}" for w in walls))
+        return spark, start + sum(walls), start
 
     def measure(self, spark, seconds: float, rss=None, min_runs: int = MIN_RUNS):
         walls, cpus, spent, n = [], [], 0.0, 0
         while spent < seconds or n < min_runs:
             n += 1
-            if rss is not None:
-                with rss:
-                    wall, cpu, ok = self.finish(spark, self.wl.run)
-            else:
-                wall, cpu, ok = self.finish(spark, self.wl.run)
+            wall, cpu, ok = self.finish(spark, self.wl.run, rss=rss)
             spent += wall
             if ok:
                 walls.append(wall)
@@ -226,19 +226,19 @@ def main() -> int:
     wl = WORKLOADS[args.workload](work, args.seed)
     t0 = time.perf_counter()
     wl.prepare()
-    gen_s = time.perf_counter() - t0
+    prep_s = time.perf_counter() - t0
 
     bench = Bench(wl, procstat)
     rss = procstat.PeakRss()
     spark = None
     try:
-        spark, setups, starts = bench.setup(get_spark)
+        spark, setup_s, start_s = bench.setup(get_spark)
         if args.trace:
             walls, _ = bench.measure(spark, args.seconds / 2, min_runs=1)
             per_run = traced_runs(bench, spark, args.seconds / 2, args.workload,
                                   args.seed, os.path.join(base, "traces"))
             values = {k: median([m[k] for m in per_run]) for k in LAYER_METRICS}
-            values["session.start_s"] = median(starts)
+            values["session.start_s"] = start_s
             values["trace.untraced_wall_s"] = median(walls)
             values["trace.overhead_s"] = (
                 values["trace.traced_wall_s"] - values["trace.untraced_wall_s"]
@@ -250,7 +250,7 @@ def main() -> int:
                 "wall_s": {"value": median(walls), "unit": "s"},
                 "cpu_s": {"value": median(cpus), "unit": "s"},
                 "peak_rss_mb": {"value": rss.peak / 2**20, "unit": "MB"},
-                "setup_s": {"value": median(setups), "unit": "s"},
+                "setup_s": {"value": setup_s, "unit": "s"},
             }
     finally:
         rss.close()
@@ -262,7 +262,7 @@ def main() -> int:
     summary = " ".join(f"{k}={v['value']:.4g} {v['unit']}" for k, v in metrics.items())
     print(f"{args.workload} seed={args.seed}: {summary} "
           f"failed_frac={bench.failed / bench.attempted:.3g} "
-          f"(runs={bench.attempted}, input_gen_s={gen_s:.3f})")
+          f"(runs={bench.attempted}, inputs_and_oracle_s={prep_s:.3f})")
     print(json.dumps({
         "correct": bench.failed == 0 and not bench.setup_failed,
         "attempted": bench.attempted,

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import filecmp
 import os
+import shutil
 import sys
 
 import duckdb
@@ -95,10 +96,12 @@ def test_output_check_fails_on_one_corrupted_row(tmp_path):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data}/{t}.parquet'")
     vcf = con.execute(sql).df().sort_values(workloads.VCF_ORDER).reset_index(drop=True)
 
-    def check(df):
+    def check(*parts):
         out = tmp_path / "vcf"
-        out.mkdir(exist_ok=True)
-        df.to_parquet(out / "part-00000.parquet", index=False)
+        shutil.rmtree(out, ignore_errors=True)
+        out.mkdir()
+        for i, df in enumerate(parts):
+            df.to_parquet(out / f"part-{i:05d}.parquet", index=False)
         return workloads.check_vcf(str(out), expected)
 
     assert check(vcf) is None
@@ -108,6 +111,9 @@ def test_output_check_fails_on_one_corrupted_row(tmp_path):
     swapped = vcf.copy()
     swapped.iloc[[10, 11]] = swapped.iloc[[11, 10]].to_numpy()
     assert "order" in check(swapped)
+    # rows in order and complete, but split over two files
+    half = len(vcf) // 2
+    assert "part files" in check(vcf.iloc[:half], vcf.iloc[half:])
 
 
 @pytest.fixture(scope="module")
@@ -150,3 +156,4 @@ def test_traced_runs_confirm_skew_and_transform_predictions(spark, tmp_path):
     assert queries["joins.pairs_out"] > 0
     assert all(queries[f"query.{q}_s"] > 0 for q in workloads.MIX)
     assert queries["spark.jobs"] > 0 and queries["spark.tasks"] > 0
+    assert hot["jvm.heap_live_mb"] > 0 and queries["jvm.heap_live_mb"] > 0

@@ -9,9 +9,11 @@ after the previous one has returned and been checked.
   `sources.fastq.read_fastq_chunks` and `sinks.checkpoint_parquet`, with
   per-chunk counts collected; then `plans.pipeline.genomics_pipeline`
   (map -> load balance -> call + merge) is written as one ordered VCF by
-  `sinks.write_single_file_ordered`. A large share of the reads sits in a
-  few planted (chr, reg) bins, so `operators.skew` must split them and the
-  Python `transform` stage is where load balance shows.
+  `sinks.write_single_file_ordered`. 30% of the reads sit in three
+  planted (chr, reg) bins, so `operators.skew` splits three keys into 96
+  groups. The hot bins make no straggler at this size (see gen.py); what
+  load-balancing work changes here is the cost of the skew pre-pass and
+  of the split groups.
 - region_queries: six JVM-only registry queries, each collected. No Python
   stage, skew pre-pass or FASTQ parsing runs, so changes to those layers
   must read "no change" here; scan, shuffle, windows and the range join
@@ -25,7 +27,6 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
-from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import numpy as np
@@ -36,6 +37,9 @@ import gen
 from tracing import Tracer, max_over_median, self_seconds
 
 N_READS = 600_000  # the size of the sf0.1 test data the plans were tuned on
+# half that for the query mix, so a benchmark run of it, set-up included,
+# lasts about a minute on 4 vCPUs like the pipeline's
+REGION_READS = 300_000
 FASTQ_CHUNKS = 16  # one of them truncated; each holds n_reads / 30 reads
 VCF_ORDER = ["chr_index", "pos"]
 MIX = (
@@ -82,6 +86,7 @@ LAYER_METRICS = {
     "fastq.bad_chunks_skipped": "count",
     "cache.release_s": "s",
     "cache.tracked": "count",
+    "jvm.heap_live_mb": "MB",
     "spark.jobs": "count",
     "spark.stages": "count",
     "spark.tasks": "count",
@@ -132,7 +137,6 @@ def digest(df: pd.DataFrame) -> str:
 def oracle_digest(data_dir: str, sql: str) -> str:
     con = duckdb.connect()
     try:
-        con.execute("SET threads TO 2")  # leaves cores to the session starting beside it
         for t in TABLES:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(data_dir, t)}.parquet'"
@@ -149,12 +153,12 @@ def part_files(path: str) -> list[str]:
 
 
 def check_vcf(path: str, expected: str) -> str | None:
-    """None if the VCF at `path` is in (chr_index, pos) order and matches
-    the oracle digest; otherwise what is wrong."""
+    """None if the VCF at `path` is one part file, in (chr_index, pos)
+    order, and matches the oracle digest; otherwise what is wrong."""
     files = part_files(path)
-    if not files:
-        return "no output files"
-    df = pd.concat([pq.read_table(f).to_pandas() for f in files], ignore_index=True)
+    if len(files) != 1:
+        return f"{len(files)} part files, not one combined VCF"
+    df = pq.read_table(files[0]).to_pandas()
     c, p = df["chr_index"].to_numpy(), df["pos"].to_numpy()
     ordered = (c[1:] > c[:-1]) | ((c[1:] == c[:-1]) & (p[1:] >= p[:-1]))
     if not ordered.all():
@@ -172,6 +176,15 @@ def noop_write(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def heap_live_mb(spark) -> float:
+    """The driver heap in use after a full collection: what the session
+    holds live (cached blocks, broadcasts, status store), not garbage."""
+    jvm = spark._jvm
+    jvm.System.gc()
+    heap = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    return heap.getHeapMemoryUsage().getUsed() / 2**20
+
+
 def chunk_counts(reads) -> pd.DataFrame:
     """Reads and bases per FASTQ chunk, collected."""
     from pyspark.sql import functions as F
@@ -182,8 +195,8 @@ def chunk_counts(reads) -> pd.DataFrame:
 
 
 class Workload:
-    """prepare() writes the inputs and starts computing the oracle's answer
-    on a thread, so DuckDB works while the session starts; run() is the
+    """prepare() writes the inputs and computes the oracle's answer before
+    the session starts, so DuckDB competes with no set-up; run() is the
     timed call; check() verifies a run's result outside the timed window;
     reset() returns the session and sink to the same state before the next
     run; traced() is run() with every layer boundary materialized and
@@ -200,13 +213,7 @@ class Workload:
 
     def prepare(self) -> None:
         self.write_inputs()
-        pool = ThreadPoolExecutor(max_workers=1)
-        self._oracle = pool.submit(self.oracle)
-        pool.shutdown(wait=False)
-
-    @property
-    def expected(self):
-        return self._oracle.result()
+        self.expected = self.oracle()
 
     def reset(self) -> None:
         from sparkga1_spark.operators.cache import release_tracked
@@ -339,12 +346,17 @@ class Genomics(Workload):
             with tr.span("sinks.write") as c:
                 write_single_file_ordered(merged, self.vcf_out, order_cols=VCF_ORDER)
                 c["bytes_written"], c["files_written"] = sink_size(self.vcf_out)
+            with tr.span("jvm") as c:
+                c["heap_live_mb"] = heap_live_mb(spark)
             with tr.span("cache.release") as c:
                 c["tracked"] = release_tracked()
         return counts
 
 
 class RegionQueries(Workload):
+    def __init__(self, work_dir: str, seed: int, n_reads: int = REGION_READS):
+        super().__init__(work_dir, seed, n_reads)
+
     def write_inputs(self) -> None:
         self.manifest = gen.write_tables(self.data, self.seed, self.n_reads, False)
 
@@ -404,6 +416,8 @@ class RegionQueries(Workload):
             for q in MIX:
                 with tr.span(f"query.{q}"):
                     out[q] = get(q)[0](spark, self.data).toPandas()
+            with tr.span("jvm") as c:
+                c["heap_live_mb"] = heap_live_mb(spark)
             with tr.span("cache.release") as c:
                 c["tracked"] = release_tracked()
         return out
