@@ -4,12 +4,15 @@ the one genuinely custom optimizer piece).
 AQE splits skewed SHUFFLE partitions, but an `applyInPandas` group is
 indivisible: one hot (chr, reg) group = one Python worker working alone
 — exactly the straggler the reference fought with its equal-frequency
-re-split (SparkGA1.scala:241-242, 289-480). The fix is the same idea,
-declarative: detect heavy keys by weight, compute per-key position
-quantiles, and salt the group key by quantile bucket so one hot group
-becomes `segments` groups. Records with equal positions always share a
-bucket (strict '>' against boundaries), so position-local semantics
-(pileup depth, interval coalescing within a bucket boundary) survive.
+re-split (SparkGA1.scala:241-242, 289-480). The pipeline gets that
+re-split from the range exchange in `transform.apply_per_group`
+(`split_on`), which needs no pre-pass. `salt_by_quantiles` is the same
+idea as an explicit pre-pass: detect heavy keys by weight, compute
+per-key position quantiles, and salt the group key by quantile bucket
+so one hot group becomes `segments` groups. Records with equal
+positions always share a bucket (strict '>' against boundaries), so
+position-local semantics (pileup depth, interval coalescing within a
+bucket boundary) survive.
 """
 
 from __future__ import annotations
@@ -36,34 +39,6 @@ def spread_if_narrow(df: DataFrame, *cols: str, factor: int = 2) -> DataFrame:
     if df.rdd.getNumPartitions() * factor >= target:
         return df
     return df.repartition(target, *cols)
-
-
-def plan_segments(
-    df: DataFrame,
-    *,
-    keys: Sequence[str],
-    regions_factor: float = 4.0,
-) -> DataFrame:
-    """P2-3: per-key segment count = round(n × factor / avg_n), min 1
-    (the reference's formula, SparkGA1.scala:241-242). One aggregate
-    pass; output is small (one row per key)."""
-    # per-key counts are reused (average input + probe side): persist so
-    # the average subquery and the final plan share one fact scan
-    counts = tracked_persist(df.groupBy(*keys).agg(F.count("*").alias("_n")))
-    # scalar average attached as a once-executed runtime subquery, NOT a global
-    # window (a partitionless Window collapses the table to one
-    # partition) and NOT crossJoin(broadcast(agg)) (a BNL whose build
-    # side replicates the counts subtree into every consumer)
-    avg = counts.agg(F.avg("_n").alias("_avg"))
-    seg = F.greatest(
-        F.lit(1).cast("long"),
-        F.floor(F.col("_n") * regions_factor / F.col("_avg") + 0.5),
-    )
-    return (
-        attach_scalar_agg(counts, avg)
-        .withColumn("_segments", seg)
-        .drop("_n", "_avg")
-    )
 
 
 def salt_by_quantiles(

@@ -5,9 +5,9 @@ The reference's heavy lifting is external processes per region (bwa,
 Picard, GATK — SparkGA1.scala:817-953); the engine's equivalent is the
 Arrow-batched pandas transform family:
 
-- apply_per_group: `applyInPandas` over group keys — the X-2..X-5,X-8
-  shape (region in → region result out). Optionally skew-salted via
-  operators/skew.py so a hot region doesn't serialize on one worker
+- apply_per_group: `applyInPandas` semantics over group keys — the
+  X-2..X-5,X-8 shape (region in → region result out). Optionally
+  range-split on a position column so a hot region spreads over tasks
   (the reference's Part-2 problem).
 - map_batches: `mapInPandas` over partitions — the X-1 shape (chunk in
   → many records out, a flatMap-style UDTF).
@@ -34,16 +34,19 @@ def apply_per_group(
     keys: Sequence[str],
     fn: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
-    salt_on: str | None = None,
-    regions_factor: float = 4.0,
+    split_on: str | None = None,
 ) -> DataFrame:
     """Run `fn` once per key group (Arrow-batched pandas in/out).
 
-    With `salt_on=<position column>`, heavy groups are pre-split into
-    equal-frequency position buckets (operators/skew.py) and `fn` runs
-    per (key..., salt) — valid whenever `fn` is position-local, i.e.
-    distributes over a position split (all X-* analogs are: they process
-    coordinate-sorted slices). The salt column is not exposed to `fn`.
+    With `split_on=<position column>`, rows are range-partitioned on
+    (keys..., split_on) instead of hashed on keys, so a group larger
+    than one partition spans several tasks and `fn` sees it as several
+    position-disjoint slices, one per task. Spark's range partitioner
+    places boundaries at sampled equal frequencies and never splits
+    equal keys — the reference's equal-frequency re-split
+    (SparkGA1.scala:241-242, 289-480) with no pre-pass. Valid whenever
+    `fn` is position-local, i.e. distributes over a position split (all
+    X-* analogs are: they process coordinate-sorted slices).
 
     Partitioning (r13 optimization, guide §2.2/§4.2): the Exchange that
     `groupBy().applyInPandas` inserts is AQE-coalescible, and AQE's
@@ -52,40 +55,36 @@ def apply_per_group(
     6 partitions, so the pandas variant caller ran 6-wide on 32 cores
     (per-task Python time 1.7–3.1 s, the query's dominant cost). Bytes
     are the wrong proxy for an expensive opaque per-row stage, so the
-    group exchange is pinned with an explicit `repartition(n, keys)`
-    (REPARTITION_BY_NUM is exempt from AQE coalescing; the hash
-    partitioning satisfies the applyInPandas ClusteredDistribution, so
-    no second exchange appears). n = spark.sql.shuffle.partitions —
-    conf-derived, scale-adaptive: at cluster scale that conf is sized to
-    the cluster, and the exchange it pins replaces (not augments) the
-    one the groupBy would insert anyway.
+    group exchange is pinned with an explicit partition count
+    (REPARTITION_BY_NUM is exempt from AQE coalescing; hash or range
+    partitioning on the keys satisfies the applyInPandas
+    ClusteredDistribution, so no second exchange appears). n =
+    spark.sql.shuffle.partitions — conf-derived, scale-adaptive: at
+    cluster scale that conf is sized to the cluster, and the exchange it
+    pins replaces (not augments) the one the groupBy would insert anyway.
 
     Group iteration (r13 optimization, guide §4.1/§4.2): applyInPandas
     builds one Arrow batch + pandas frame PER GROUP in both directions —
     measured ~20 ms/group of pure machinery on the sf0.1 variant-caller
     stage (837 groups, 0.44 s of fn CPU inside ~17 task-seconds of
     stage time). The same ClusteredDistribution is realized manually:
-    hash-repartition on the group keys, sortWithinPartitions so groups
+    repartition on the group keys, sortWithinPartitions so groups
     arrive contiguous, and ONE mapInPandas whose generator walks key
-    runs with pandas groupby, buffering only the batch-spanning
-    trailing run. fn still sees exactly one group per call (keys
-    included, salt dropped — the applyInPandas contract); outputs
-    concatenate per input batch so the return path ships a few large
-    Arrow batches instead of one per group.
+    runs, buffering only the batch-spanning trailing run. fn still sees
+    exactly one group (or, with split_on, one group's slice) per call,
+    keys included — the applyInPandas contract; outputs concatenate per
+    input batch so the return path ships a few large Arrow batches
+    instead of one per group.
     """
     import numpy as np
 
     n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    if salt_on is None:
-        group_cols = list(keys)
-        src = df
+    group_cols = list(keys)
+    if split_on is None:
+        src, sort_cols = df.repartition(n_parts, *group_cols), group_cols
     else:
-        from sparkga1_spark.operators.skew import salt_by_quantiles
-
-        group_cols = [*keys, "salt"]
-        src = salt_by_quantiles(
-            df, keys=keys, pos_col=salt_on, regions_factor=regions_factor
-        )
+        sort_cols = [*group_cols, split_on]
+        src = df.repartitionByRange(n_parts, *sort_cols)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         buf: pd.DataFrame | None = None
@@ -96,8 +95,7 @@ def apply_per_group(
             # boundaries with one vectorized null-safe comparison per
             # key column and slice, instead of pandas groupby hashing
             # every row (r14, guide §4.2 — measured 16.5 → 10.7
-            # ms/batch on a 9.4k-row 26-group batch; also drops the
-            # per-GROUP salt-column copy to one per batch). Null keys
+            # ms/batch on a 9.4k-row 26-group batch). Null keys
             # compare equal to null, matching groupby(dropna=False).
             n = len(pdf)
             brk = np.zeros(n, dtype=bool)
@@ -110,13 +108,12 @@ def apply_per_group(
                 if na.any():
                     neq &= ~(na[1:] & na[:-1])
                 brk[1:] |= neq
-            body = pdf if salt_on is None else pdf.drop(columns=["salt"])
             bounds = np.concatenate(
                 ([0], np.flatnonzero(brk), [n])
             )
             outs = []
             for i in range(len(bounds) - 1):
-                o = fn(body.iloc[bounds[i]:bounds[i + 1]])
+                o = fn(pdf.iloc[bounds[i]:bounds[i + 1]])
                 if o is not None and len(o):
                     outs.append(o)
             if not outs:
@@ -154,11 +151,7 @@ def apply_per_group(
             if out is not None:
                 yield out
 
-    return (
-        src.repartition(n_parts, *group_cols)
-        .sortWithinPartitions(*group_cols)
-        .mapInPandas(gen, schema=schema)
-    )
+    return src.sortWithinPartitions(*sort_cols).mapInPandas(gen, schema=schema)
 
 
 def map_batches(

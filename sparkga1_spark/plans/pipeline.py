@@ -5,9 +5,17 @@ The reference runs three Spark jobs relaying files through HDFS
 here the same semantics are ONE lazy plan:
 
     scan → filter (F-2) → broadcast dict join + range bin (J-1/F-7)
-        → skew-salted per-region pandas transform (X-5 analog, P2-3/P2-4)
-        → union header rows (U-2) → distinct (U-3)
-        → global composite-key sort (O-2)
+        → range exchange on (chr, reg, pos) + per-region pandas
+          transform (X-5 analog; hot regions split at equal-frequency
+          position boundaries, P2-3/P2-4)
+        → union header rows (U-2) → global composite-key sort (O-2)
+
+No `distinct`: every called locus comes from exactly one task (the
+range partitioner never splits a position), header keys are unique,
+and the oracle is UNION ALL.
+
+The pandas variant caller is the only Python in the run; FASTQ ingest
+(sources/fastq.py) stays on the JVM.
 
 The "variant caller" stand-in is deterministic pure Python (pileup
 depth ≥ 2 per locus) so the whole pipeline stays oracle-checkable —
@@ -65,25 +73,23 @@ def call_variants_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     )[["chr_index", "reg", "pos", "depth", "avg_mapq"]]
 
 
-def variant_call_stage(
-    binned: DataFrame, *, salt: bool = True, regions_factor: float = 4.0
-) -> DataFrame:
-    """The per-(chr, reg) black-box stage, skew-salted so a hot region
-    splits into position buckets (depth is position-local, so salting by
-    position quantiles cannot change results)."""
+def variant_call_stage(binned: DataFrame, *, salt: bool = True) -> DataFrame:
+    """The per-(chr, reg) black-box stage. With `salt` (the default) the
+    rows are range-split on (chr, reg, pos), so a hot region spans tasks
+    at position boundaries; without it each region is one group. Depth
+    is position-local, so both give the same rows."""
     return apply_per_group(
         binned.select("chr_index", "reg", "pos", "mapq"),
         keys=("chr_index", "reg"),
         fn=call_variants_pdf,
         schema=VARIANT_SCHEMA,
-        salt_on="pos" if salt else None,
-        regions_factor=regions_factor,
+        split_on="pos" if salt else None,
     )
 
 
 def genomics_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full map→balance→call→merge flow as one plan; returns the merged,
-    deduplicated, globally ordered 'VCF' with header rows first."""
+    globally ordered 'VCF' with header rows first."""
     al = filters.filter_unmapped(
         fixtures.alignments(load_table(spark, sf_dir, "lineitem"))
     )
@@ -97,5 +103,4 @@ def genomics_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("depth"),
         F.lit(0.0).alias("avg_mapq"),
     )
-    merged = header.unionByName(called).distinct()
-    return merged.orderBy("chr_index", "pos")
+    return header.unionByName(called).orderBy("chr_index", "pos")

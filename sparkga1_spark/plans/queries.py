@@ -601,7 +601,7 @@ def p2_skew_detect(spark, sf_dir):
     # (r7 VERDICT #2: the crossJoin(broadcast(agg)) form is a BNL whose
     # build side replicates the weights subtree), NOT avg().over(Window
     # .partitionBy()) — a partition-less window funnels the whole
-    # region table through one task; plan_segments documents the same
+    # region table through one task
     avg = weights.agg(F.avg("n_reads").alias("_avg"))
     seg = F.floor(F.col("n_reads") * 4.0 / F.col("_avg") + 0.5)
     return (
@@ -1296,8 +1296,9 @@ _VARIANT_BODY_SQL = """
 )
 def x_blackbox_variant_call(spark, sf_dir):
     """X-5 analog: per-(chr, reg) pandas transform (pileup depth ≥ 2),
-    skew-salted by position quantiles (SURVEY.md §4 row 5) — the oracle
-    proves salting does not change group-transform results."""
+    range-split on (chr, reg, pos) so a hot region spans tasks at
+    position boundaries (SURVEY.md §4 row 5) — the oracle proves the
+    split does not change group-transform results."""
     from sparkga1_spark.plans.pipeline import variant_call_stage
 
     al = filters.filter_unmapped(_alignments(spark, sf_dir))
@@ -1320,7 +1321,7 @@ SELECT chr_index, reg, pos, depth, avg_mapq FROM (
 )
 def pipeline_end_to_end(spark, sf_dir):
     """M7: the reference's whole three-job pipeline as ONE lazy plan
-    (scan→filter→bin→salted pandas call→union header→distinct→sort)."""
+    (scan→filter→bin→range-split pandas call→union header→sort)."""
     from sparkga1_spark.plans.pipeline import genomics_pipeline
 
     return genomics_pipeline(spark, sf_dir)

@@ -4,11 +4,13 @@ The reference (SparkGA1.scala:995-1022) builds a SparkContext per "part"
 with hand-tuned executor shapes; here one session serves every plan and
 Catalyst/AQE own the physical tuning (SURVEY.md §4).
 
-Scale posture: these defaults are for the local[32] test harness. On a
-real cluster the same code runs unchanged — only master/memory/shuffle
-partition count move to spark-submit conf. AQE handles partition
-coalescing and skew splitting at runtime, so shuffle.partitions is a
-ceiling, not a tuning knob that must be exact.
+Scale posture: the defaults fit the host the session starts on — one
+local core per CPU (or $SPARK_GRAFT_CPUS) and a driver heap of half
+its memory (or $SPARK_GRAFT_DRIVER_MEM). On a real cluster the same
+code runs unchanged — only master/memory/shuffle partition count move
+to spark-submit conf. AQE handles partition coalescing and skew
+splitting at runtime, so shuffle.partitions is a ceiling, not a tuning
+knob that must be exact.
 """
 
 from __future__ import annotations
@@ -44,6 +46,19 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_memory() -> str:
+    """Half the memory this process can use (physical RAM, or the
+    cgroup limit when lower), in whole GiB between 1g and 16g: the rest
+    is left to Python workers, off-heap buffers and the OS."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            total = min(total, int(f.read()))
+    except (OSError, ValueError):  # no cgroup v2 limit ("max" or absent)
+        pass
+    return f"{max(1, min(16, total // 2**31))}g"
+
+
 def get_spark(app_name: str = "sparkga1_spark", *, cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the engine session.
 
@@ -59,7 +74,10 @@ def get_spark(app_name: str = "sparkga1_spark", *, cpus: int | None = None) -> S
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus or 32))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Long-session hygiene (r10, the bench-drift investigation):

@@ -2,28 +2,34 @@
 
 The reference consumes gzipped FASTQ chunks one-file-per-task
 (SparkGA1.scala:1084-1098; 4-line records: @name / sequence / + /
-quality, pairs interleaved per README.md:130). The Spark-first form:
+quality, pairs interleaved per README.md:130). The Spark-first form
+stays on the JVM end to end:
 
-- `binaryFile` source: one row per chunk file (path, bytes) — the
-  file-granular unit the chunker produced, with Spark handling
-  distribution instead of a hand-rolled downloader;
-- an Arrow-batched mapInPandas flatMap decompresses and parses each
-  chunk into typed read records (the X-1 1→N shape; gunzip = X-6).
+- the `text` source with `wholetext=True`: one row per chunk file,
+  decompressed by Hadoop's codec (gzip or plain, by extension);
+  `ignoreCorruptFiles` skips a chunk that fails to decode, whole;
+- `split` into lines, `transform` into 4-line records, `filter` the
+  well-formed ones (name starts with `@`, third line with `+`) and
+  number them by position (`posexplode_outer`), so `read_idx` counts
+  valid records only;
+- `chunk` is the file name from the `_metadata` column.
 
-A 60 MB gzip chunk (the reference's tuning) decodes to ~250 MB of
-records per task — the same memory envelope the reference's bwa tasks
-had. For bigger chunks, split upstream or switch to the `text` source
-with record re-assembly.
+No Python worker, no Arrow round trip, no shuffle. A 60 MB gzip chunk
+(the reference's tuning) decodes to one ~250 MB string per task; a
+chunk over 2 GB decompressed cannot be one row, so split such input
+upstream.
+
+`parse_fastq_bytes` is the same contract in pure Python, kept as the
+reference the reader is tested against.
 """
 
 from __future__ import annotations
 
 import gzip
 import zlib
-from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 READ_SCHEMA = (
     "chunk string, read_idx long, read_name string, sequence string, "
@@ -43,8 +49,7 @@ def parse_fastq_bytes(data: bytes, chunk: str) -> pd.DataFrame:
             data = gzip.decompress(data)
         except (OSError, EOFError, zlib.error):
             # corrupted chunk: skip it, don't abort the job (the
-            # reference's badLines tolerance, SamRegionsParser.scala:71-74
-            # — surface counts via observe() on the result if needed)
+            # reference's badLines tolerance, SamRegionsParser.scala:71-74)
             return empty
     lines = data.decode("utf-8", errors="replace").split("\n")
     out = []
@@ -61,14 +66,69 @@ def parse_fastq_bytes(data: bytes, chunk: str) -> pd.DataFrame:
     )
 
 
-def read_fastq_chunks(spark: SparkSession, path: str) -> DataFrame:
-    """Chunk files → typed `reads` DataFrame. One input row per file
-    (binaryFile source), fanned out to records via mapInPandas."""
-    files = spark.read.format("binaryFile").load(path)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p, content in zip(pdf["path"], pdf["content"]):
-                yield parse_fastq_bytes(bytes(content), p.rsplit("/", 1)[-1])
-
-    return files.select("path", "content").mapInPandas(decode, schema=READ_SCHEMA)
+def read_fastq_chunks(
+    spark: SparkSession, path: str, observation: Observation | None = None
+) -> DataFrame:
+    """Chunk files → typed `reads` DataFrame (READ_SCHEMA), one task per
+    packed group of whole files. With `observation`, the job that reads
+    the chunks also reports `bad_chunks_skipped` (chunks listed but not
+    decoded) and `malformed_records` (4-line records dropped)."""
+    # wholetext must be the keyword: text()'s own default would
+    # overwrite an .option("wholetext", ...) set before it
+    files = spark.read.option("ignoreCorruptFiles", "true").text(path, wholetext=True)
+    # one projection of its own, so the lambda indexes the split array
+    # instead of re-splitting the chunk per line
+    per_file = files.select(
+        F.col("_metadata.file_name").alias("chunk"),
+        F.split("value", "\n").alias("lines"),
+    )
+    lines = F.col("lines")
+    # record k is lines[4k..4k+3]; a trailing partial record is ignored
+    starts = F.when(
+        F.size(lines) >= 4, F.sequence(F.lit(0), F.size(lines) - 4, F.lit(4))
+    ).otherwise(F.array().cast("array<int>"))
+    per_file = per_file.select(
+        "chunk",
+        F.transform(
+            starts,
+            lambda i: F.struct(
+                lines[i].alias("name"),
+                lines[i + 1].alias("sequence"),
+                lines[i + 2].alias("plus"),
+                lines[i + 3].alias("quality"),
+            ),
+        ).alias("recs"),
+    ).select(
+        "chunk",
+        F.size("recs").alias("n_recs"),
+        F.filter(
+            "recs", lambda r: r["name"].startswith("@") & r["plus"].startswith("+")
+        ).alias("recs"),
+    )
+    if observation is not None:
+        # inputFiles() is the planned file listing: no job
+        per_file = per_file.observe(
+            observation,
+            (F.lit(len(files.inputFiles())) - F.count(F.lit(1))).alias(
+                "bad_chunks_skipped"
+            ),
+            F.coalesce(F.sum(F.col("n_recs") - F.size("recs")), F.lit(0)).alias(
+                "malformed_records"
+            ),
+        )
+    # posexplode_outer + null filter, not posexplode: for the latter the
+    # optimizer infers a `size(recs) > 0` filter and pushes it below the
+    # projections, inlining split() into the lambda — one re-split of
+    # the whole chunk per record
+    return (
+        per_file.select("chunk", F.posexplode_outer("recs").alias("read_idx", "r"))
+        .filter(F.col("r").isNotNull())
+        .select(
+            "chunk",
+            F.col("read_idx").cast("long"),
+            F.substr("r.name", F.lit(2)).alias("read_name"),
+            F.col("r.sequence"),
+            F.col("r.quality"),
+            F.length("r.sequence").alias("read_len"),
+        )
+    )

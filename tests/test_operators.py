@@ -71,6 +71,52 @@ def test_salting_preserves_group_transform_results(spark, sf_dir):
     assert salted == unsalted
 
 
+def test_range_split_spreads_hot_region_over_tasks(spark):
+    """One (chr_index, reg) holding 60% of the rows, more than 1/n of
+    them for n shuffle partitions: the range exchange must call it in
+    several tasks, at position boundaries, and the result must equal
+    the one-group-per-region call row for row."""
+    from sparkga1_spark.plans.pipeline import variant_call_stage
+
+    hot = F.col("id") % 10 < 6
+    binned = spark.range(12_000).select(
+        F.when(hot, 1).otherwise(F.col("id") % 5 + 2).cast("int").alias("chr_index"),
+        F.when(hot, 0).otherwise(F.col("id") % 3).cast("int").alias("reg"),
+        (F.col("id") % 997).cast("int").alias("pos"),
+        (F.col("id") % 61).cast("int").alias("mapq"),
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        split = variant_call_stage(binned, salt=True)
+        whole = variant_call_stage(binned, salt=False)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    tasks = (
+        split.filter((F.col("chr_index") == 1) & (F.col("reg") == 0))
+        .select(F.spark_partition_id().alias("p"))
+        .distinct()
+        .count()
+    )
+    assert tasks >= 2, "the hot region was called in one task"
+    assert sorted(map(tuple, split.collect())) == sorted(map(tuple, whole.collect()))
+
+
+def test_driver_heap_default_fits_host(spark):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is half the host's
+    memory at most (1g-16g), not a fixed size larger than the host."""
+    import os
+
+    from sparkga1_spark.session import _default_driver_memory
+
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    gib = int(_default_driver_memory().removesuffix("g"))
+    assert 1 <= gib <= 16
+    assert gib == 1 or gib * 2**30 <= ram / 2
+    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+
 def test_coalesce_intervals_zero_slack_and_containment(spark, sf_dir):
     from sparkga1_spark.operators.windows import coalesce_intervals
 
@@ -204,7 +250,7 @@ def test_fastq_to_pipeline_end_to_end(spark, sf_dir, tmp_path):
     chunk files -> parse (S-1/X-6) -> 'aligner' stand-in (X-1, 1->1
     batch transform assigning deterministic coordinates) -> broadcast
     dict join + range bin (J-1/F-7) -> per-region depth calling with
-    skew salting (X-5/P2-4) -> region stats. Every stage is the real
+    a range split (X-5/P2-4) -> region stats. Every stage is the real
     operator; only the aligner itself is the deterministic stand-in."""
     import gzip
 

@@ -187,8 +187,8 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir):
 
 def test_fastq_chunk_reader(spark, tmp_path):
     """The reference's real ingestion path: gzipped FASTQ chunk files ->
-    typed reads DataFrame (binaryFile source + mapInPandas parse;
-    gunzip = X-6 handled inline)."""
+    typed reads DataFrame (whole-file text source, records built with
+    array functions; gunzip = X-6 by the Hadoop codec)."""
     import gzip as _gzip
 
     from sparkga1_spark.sources.fastq import read_fastq_chunks
@@ -214,6 +214,68 @@ def test_fastq_chunk_reader(spark, tmp_path):
     # paired reads share a stem — the interleave join key (S-3)
     stems = [r.read_name.split("/")[0] for r in reads.collect()]
     assert stems.count("r1") == 2
+
+
+def test_fastq_reader_matches_reference_parser(spark, tmp_path):
+    """read_fastq_chunks gives, file by file, exactly the rows of the
+    pure-Python parse_fastq_bytes: on good gzipped chunks, a truncated
+    one, a bit-flipped one, a plain .fq and a chunk with malformed
+    records in the middle. The same job counts the two skipped chunks
+    and the two malformed records; its plan runs no Python and splits
+    each chunk into lines once."""
+    import gzip
+    import random
+
+    from sparkga1_spark.sources.fastq import parse_fastq_bytes, read_fastq_chunks
+
+    rng = random.Random(7)
+
+    def chunk(c: int, n: int) -> bytes:
+        recs = []
+        for i in range(n):
+            seq = "".join(rng.choice("ACGT") for _ in range(rng.randint(20, 60)))
+            qual = "".join(chr(rng.randint(33, 74)) for _ in seq)
+            recs.append(f"@c{c}_r{i}\n{seq}\n+\n{qual}\n")
+        return "".join(recs).encode()
+
+    d = tmp_path / "chunks"
+    d.mkdir()
+    for c in range(3):
+        (d / f"chunk_{c}.fq.gz").write_bytes(gzip.compress(chunk(c, 200), mtime=0))
+    whole = gzip.compress(chunk(3, 200), mtime=0)
+    (d / "truncated.fq.gz").write_bytes(whole[: len(whole) // 2])
+    good = gzip.compress(chunk(4, 50), mtime=0)
+    mid = 10 + (len(good) - 18) // 2  # inside the deflate body
+    (d / "flipped.fq.gz").write_bytes(good[:mid] + bytes([good[mid] ^ 0xFF]) + good[mid + 1:])
+    (d / "plain.fq").write_bytes(chunk(5, 30))
+    lines = chunk(6, 40).split(b"\n")
+    lines[4 * 10] = b"not-a-name"  # record 10 lacks its '@'
+    lines[4 * 20 + 2] = b"-"  # record 20 lacks its '+'
+    (d / "malformed.fq.gz").write_bytes(gzip.compress(b"\n".join(lines), mtime=0))
+
+    files = sorted(os.listdir(d))
+    expected = {
+        name: parse_fastq_bytes((d / name).read_bytes(), name) for name in files
+    }
+    assert len(expected["truncated.fq.gz"]) == len(expected["flipped.fq.gz"]) == 0
+    assert len(expected["malformed.fq.gz"]) == 38
+
+    plan = read_fastq_chunks(spark, str(d))._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+    # each chunk is split into lines once, not once per record
+    assert plan.count("split(") == 1, plan
+    obs = Observation("fastq")
+    reads = read_fastq_chunks(spark, str(d), obs)
+    got = reads.toPandas()
+    cols = list(got.columns)
+    for name in files:
+        want = [tuple(r) for r in expected[name][cols].itertuples(index=False)]
+        have = sorted(
+            tuple(r) for r in got[got["chunk"] == name].itertuples(index=False)
+        )
+        assert have == want, name
+    assert len(got) == sum(len(e) for e in expected.values()) == 3 * 200 + 30 + 38
+    assert obs.get == {"bad_chunks_skipped": 2, "malformed_records": 2}
 
 
 def test_compact_parquet_merges_small_files(spark, sf_dir, tmp_path):
