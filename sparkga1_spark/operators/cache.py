@@ -59,8 +59,8 @@ def scalar_subq(agg_df: DataFrame) -> dict[str, Column]:
     runtime; every additional reference to the same struct compiles to
     a ReusedSubquery node, so the aggregate's subtree is never
     replicated — the de-replication guarantee of `scalar_lits` without
-    its fixed build-time job (the r8→r9 drift A/B measured that job at
-    ~0.2-0.5s per query at sf0.1, tools/drift_ab.py).
+    its fixed build-time job (an interleaved A/B measured that job at
+    ~0.2-0.5s per query at sf0.1).
 
     Use THIS wherever the scalar is only attached to plan expressions.
     Keep `scalar_lits` where the value must reach Python at build time

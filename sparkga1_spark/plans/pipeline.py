@@ -8,7 +8,13 @@ here the same semantics are ONE lazy plan:
         → range exchange on (chr, reg, pos) + per-region pandas
           transform (X-5 analog; hot regions split at equal-frequency
           position boundaries, P2-3/P2-4)
-        → union header rows (U-2) → global composite-key sort (O-2)
+        → union header rows (U-2) → composite-key order (O-2)
+
+The closing `orderBy` orders the frame for any consumer; under
+`sinks.write_single_file_ordered` the optimizer drops it beneath the
+sink's single-partition exchange and the one writer task sorts instead,
+so the written plan keeps one range exchange (the caller's) and the
+Python stage runs once.
 
 No `distinct`: every called locus comes from exactly one task (the
 range partitioner never splits a position), header keys are unique,

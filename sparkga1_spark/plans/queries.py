@@ -8344,9 +8344,8 @@ def _crawl_ingest_stream(spark, src_dir: str, admitted_path: str,
     dedup ADMISSION gate against the standing bucketed index. Factored
     out so the checkpoint-recovery pytest can run it in phases against
     the same checkpoint. The GATE keeps files_per_trigger=1 (the
-    deterministic 4-round unroll its oracle depends on);
-    tools/ingest_scale_smoke.py's parallel arm raises it to measure
-    per-batch parse parallelism = files-per-batch (r8 VERDICT #7)."""
+    deterministic 4-round unroll its oracle depends on); raising it
+    makes per-batch parse parallelism = files-per-batch."""
     import hashlib as _hl
 
     from sparkga1_spark.operators.crawl import warc_response_payloads
@@ -12615,7 +12614,7 @@ def x_dedup_cluster_size_hist(spark, sf_dir):
 # r13 rotation was fixed, so 18 rewritten queries were never
 # re-checked by the independent driver oracle. This window fronts
 # ALL 18 (semantics-affecting rewrites first), then fills the
-# remaining 32 slots from tools/rotation_union.py's oldest-first
+# remaining 32 slots from the oldest-first
 # candidate window (age histogram r9:25 r10:49 r11:49 r12:49 r13:50;
 # 7 of the 18 are themselves r9-age, so this window also retires
 # every remaining r9-age row).
@@ -12648,7 +12647,7 @@ set_gate_order([
     "x_token_budget_sample",
     "x_crawl_ingest_pipeline",
     # (b) the 22 remaining r9-age rows (oldest driver coverage left;
-    # tools/rotation_union.py candidate order)
+    # oldest-first candidate order)
     "x_drift_chi2",
     "x_drift_psi",
     "x_dsir_importance",

@@ -10,11 +10,12 @@ SparkGA1.scala:1241-1250). Spark-first equivalents:
   order; no driver-side byte shuffling.
 - checkpoint: just parquet (columnar, splittable — the manifest TSV
   disappears into a stage boundary unless explicitly materialized).
-- single-file ordered sink: range-sort globally, then coalesce(1) for
-  the final write only. The sort itself is distributed (range exchange);
-  only the last write funnels — same topology as the reference's
-  driver-side merge, minus the collect. For large outputs prefer the
-  partitioned sink; this exists for the "one VCF file" contract.
+- single-file ordered sink: one exchange into a single partition, then
+  a sort inside the one writer task — the reference's funnel to one
+  writer (sortByKey + driver-side merge) minus the collect, with no
+  range-partitioner sample job re-running the plan below it. The sort
+  spills like any Spark sort. For large outputs prefer the partitioned
+  sink; this exists for the "one VCF file" contract.
 """
 
 from __future__ import annotations
@@ -51,11 +52,12 @@ def write_single_file_ordered(
     mode: str = "overwrite",
 ) -> None:
     """S-7: one globally ordered file (the combined-VCF contract,
-    SparkGA1.scala:1241-1250). orderBy does a distributed range sort;
-    coalesce(1) only funnels the already-sorted partitions into a single
-    writer, preserving order (coalesce keeps partition order and does
-    not redistribute rows)."""
-    df.orderBy(*order_cols).coalesce(1).write.mode(mode).parquet(path)
+    SparkGA1.scala:1241-1250). `repartition(1)` is a single-partition
+    exchange (no range sample job, so the plan below it runs once, and
+    AQE leaves a by-number repartition alone); the sort then runs in the
+    one writer task that already sees every row. An `orderBy` in `df`
+    itself is dropped by the optimizer beneath the repartition."""
+    df.repartition(1).sortWithinPartitions(*order_cols).write.mode(mode).parquet(path)
 
 
 def checkpoint_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> DataFrame:
@@ -63,7 +65,9 @@ def checkpoint_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> Dat
     and return a fresh scan over it — cuts lineage exactly like the
     reference's between-jobs file relay, but columnar and splittable."""
     df.write.mode(mode).parquet(path)
-    return df.sparkSession.read.parquet(path)
+    # the writer's schema is known: passing it skips the footer-read
+    # schema-inference job on read-back
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def write_bucketed_table(

@@ -392,8 +392,7 @@ def test_ivfpq_trained_recall_floors(planted):
     top-1 = 0.95 at nprobe=1 and 1.00 at nprobe=2 at BOTH sf0.001 and
     sf0.01 — equal to IVF-flat's exact rescoring (0.95/1.00) and
     above flat trained-PQ's 0.975, while the ADC scan only ever
-    touches probed-cluster candidates (the 100x cost story is in
-    tools/ann_scale_audit.py). Floors: 0.90 / 0.95."""
+    touches probed-cluster candidates. Floors: 0.90 / 0.95."""
     cent = (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 1000000)
     books = S.train_pq_codebooks(
         planted.filter(F.col("vec_id") < 1000000), n_codes=16, iters=3

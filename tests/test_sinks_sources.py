@@ -49,6 +49,57 @@ def test_single_file_ordered_sink(spark, sf_dir, tmp_path):
     assert keys == sorted(keys), "global order not preserved in the single file"
     assert len(rows) == va.count()
 
+    # rows spread over several partitions, each in reverse key order,
+    # some with a null key: one file, same rows and order as orderBy
+    # (nulls first)
+    rev = spark.range(0, 600, numPartitions=4).select(
+        F.when(F.col("id") % 17 == 0, F.lit(None))
+        .otherwise(((599 - F.col("id")) / 7).cast("int"))
+        .alias("k"),
+        (599 - F.col("id")).cast("int").alias("p"),
+    )
+    order = ["k", "p"]
+    out = str(tmp_path / "reversed")
+    write_single_file_ordered(rev, out, order_cols=order)
+    files = glob.glob(os.path.join(out, "*.parquet"))
+    assert len(files) == 1
+    got = spark.read.parquet(files[0]).collect()
+    assert got == rev.orderBy(*order).collect()
+    assert got[0].k is None
+
+
+def test_single_file_sink_runs_upstream_once(spark, tmp_path):
+    """The sink adds one single-partition exchange and no range sample
+    job, so a Python stage beneath it runs once per write: the same
+    number of caller invocations as a write that funnels nothing."""
+    from sparkga1_spark.operators.transform import apply_per_group
+    from sparkga1_spark.plans.pipeline import VARIANT_SCHEMA, call_variants_pdf
+    from sparkga1_spark.sources.sinks import write_single_file_ordered
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(pdf):
+        calls.add(1)
+        return call_variants_pdf(pdf)
+
+    reads = spark.range(20_000).select(
+        (F.col("id") % 3).cast("int").alias("chr_index"),
+        (F.col("id") % 5).cast("int").alias("reg"),
+        ((F.col("id") * 7919) % 4_000).cast("int").alias("pos"),
+        (F.col("id") % 61).cast("int").alias("mapq"),
+    )
+    called = apply_per_group(
+        reads, keys=("chr_index", "reg"), fn=counted,
+        schema=VARIANT_SCHEMA, split_on="pos",
+    )
+    called.write.format("noop").mode("overwrite").save()
+    noop_calls, calls.value = calls.value, 0
+    write_single_file_ordered(
+        called, str(tmp_path / "vcf"), order_cols=["chr_index", "pos"]
+    )
+    assert noop_calls > 0
+    assert calls.value == noop_calls
+
 
 def test_checkpoint_parquet_cuts_lineage(spark, sf_dir, tmp_path):
     from sparkga1_spark.sources import fixtures
@@ -56,10 +107,14 @@ def test_checkpoint_parquet_cuts_lineage(spark, sf_dir, tmp_path):
     from sparkga1_spark.sources.sinks import checkpoint_parquet
 
     al = fixtures.alignments(load_table(spark, sf_dir, "lineitem"))
-    ck = checkpoint_parquet(al, str(tmp_path / "ck"))
+    path = str(tmp_path / "ck")
+    ck = checkpoint_parquet(al, path)
     assert ck.count() == al.count()
     # fresh scan: the plan must be a bare parquet read, not the derivation
     assert "lineitem" not in ck._jdf.queryExecution().executedPlan().toString()
+    # the read-back passes the written schema instead of inferring it;
+    # it must be the schema inference would have found
+    assert ck.schema == spark.read.parquet(path).schema
 
 
 def test_alternate_formats_roundtrip(spark, sf_dir, tmp_path):
@@ -129,6 +184,27 @@ def test_pipeline_to_sinks_end_to_end(spark, sf_dir, tmp_path):
     write_single_file_ordered(
         result, combined_out, order_cols=["chr_index", "pos"]
     )
+    # the written plan keeps exactly one range exchange, the one feeding
+    # the variant caller: the pipeline's orderBy is dropped beneath the
+    # sink's single-partition exchange
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    graph = store.planGraph(executions.apply(executions.size() - 1).executionId())
+    nodes = [graph.allNodes().apply(i) for i in range(graph.allNodes().size())]
+    parent = {
+        e.fromId(): e.toId()
+        for e in (graph.edges().apply(i) for i in range(graph.edges().size()))
+    }
+    name = {n.id(): n.name() for n in nodes}
+    assert any(n.name() == "Execute InsertIntoHadoopFsRelationCommand" for n in nodes)
+    ranged = [n.id() for n in nodes if n.desc().startswith("Exchange rangepartitioning")]
+    assert len(ranged) == 1
+    above, node = [], ranged[0]
+    while node in parent:
+        node = parent[node]
+        above.append(name[node])
+    assert "MapInPandas" in above
     # partitioned sink: all body rows present, partition dirs exist
     assert spark.read.parquet(regions_out).count() == body.count()
     assert glob.glob(os.path.join(regions_out, "chr_index=*"))

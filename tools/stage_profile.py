@@ -1,9 +1,10 @@
 """Per-stage / per-operator empirical profile of headline queries (r13
 optimization round; guide §1.1/§7.1 "start with the UI").
 
-bench.py runs with the UI disabled, so its numbers say WHICH query is
-slow but not WHERE the time goes. This tool re-runs selected queries in
-a bench-identical session with the UI enabled and scrapes the REST API
+Sessions from `get_spark` run with the UI disabled, so timings say
+WHICH query is slow but not WHERE the time goes. This tool re-runs
+selected queries in such a session with the UI enabled and scrapes the
+REST API
 (/api/v1) for:
 
   - per-STAGE wall time, task time, executor CPU, input / shuffle bytes
@@ -11,12 +12,11 @@ a bench-identical session with the UI enabled and scrapes the REST API
   - per-OPERATOR metrics from the SQL tab (nodeName + metrics — where
     inside one stage the time sits: scan, exchange, Python eval, join)
 
-Methodology matches bench.py: same session confs, 2 warm-up passes at
-sf0.001, N timed runs at the bench sf with release_tracked() between
-runs; the profile is read AFTER the timed runs so listener overhead sits
-outside the reported wall times (the UI listener itself adds a few
-percent — numbers here are for attribution, bench.py stays the
-headline instrument).
+Methodology: `get_spark` session confs, 2 warm-up passes at sf0.001,
+N timed runs at the chosen sf with release_tracked() between runs; the
+profile is read AFTER the timed runs so listener overhead sits outside
+the reported wall times (the UI listener itself adds a few percent —
+numbers here are for attribution; `perfbench/run.py` is the benchmark).
 
 Usage:
     python tools/stage_profile.py <query> [query ...] [--runs N] [--sf DIR]
