@@ -975,7 +975,7 @@ def ivfpq_topk(
     IVF coarse quantizer routes the PQ asymmetric-distance scan through
     the query's `nprobe` probed clusters, so ADC cost is
     Σ probed-cluster sizes × n_subspaces instead of corpus-wide (flat
-    PQ's candidate-linear scan measured 98s at 100× in SCALE_SMOKE_r8;
+    PQ's candidate-linear scan measured 98s at a 100× corpus;
     the composition is the textbook IVFADC layout of Jégou et al.'s
     public PQ paper).
 

@@ -6,9 +6,12 @@ Picard, GATK — SparkGA1.scala:817-953); the engine's equivalent is the
 Arrow-batched pandas transform family:
 
 - apply_per_group: `applyInPandas` semantics over group keys — the
-  X-2..X-5,X-8 shape (region in → region result out). Optionally
-  range-split on a position column so a hot region spreads over tasks
-  (the reference's Part-2 problem).
+  X-2..X-5,X-8 shape (region in → region result out) — through one
+  range exchange and one sorted-run walk. Equal keys are never split,
+  so each group reaches `fn` whole; with a position column to split on,
+  a hot region spreads over tasks as position-disjoint slices (the
+  reference's Part-2 re-split), which is valid only for a
+  position-local `fn`.
 - map_batches: `mapInPandas` over partitions — the X-1 shape (chunk in
   → many records out, a flatMap-style UDTF).
 - pipe_partitions: the rdd.pipe analog for true external binaries, kept
@@ -36,122 +39,66 @@ def apply_per_group(
     schema: str,
     split_on: str | None = None,
 ) -> DataFrame:
-    """Run `fn` once per key group (Arrow-batched pandas in/out).
+    """Run `fn` once per key group (Arrow-batched pandas in/out) — the
+    `groupBy(*keys).applyInPandas(fn, schema)` contract: `fn` gets one
+    group, keys included; `None` or empty outputs are dropped.
 
-    With `split_on=<position column>`, rows are range-partitioned on
-    (keys..., split_on) instead of hashed on keys, so a group larger
-    than one partition spans several tasks and `fn` sees it as several
-    position-disjoint slices, one per task. Spark's range partitioner
-    places boundaries at sampled equal frequencies and never splits
-    equal keys — the reference's equal-frequency re-split
-    (SparkGA1.scala:241-242, 289-480) with no pre-pass. Valid whenever
-    `fn` is position-local, i.e. distributes over a position split (all
-    X-* analogs are: they process coordinate-sorted slices).
+    Rows are range-partitioned on (keys..., split_on) into
+    spark.sql.shuffle.partitions parts, sorted within each part, and
+    walked by ONE mapInPandas. Conditions this relies on:
 
-    Partitioning (r13 optimization, guide §2.2/§4.2): the Exchange that
-    `groupBy().applyInPandas` inserts is AQE-coalescible, and AQE's
-    byte-based heuristic starves the Python stage — measured on
-    pipeline_end_to_end at sf0.1: 20 MiB of shuffle output coalesced to
-    6 partitions, so the pandas variant caller ran 6-wide on 32 cores
-    (per-task Python time 1.7–3.1 s, the query's dominant cost). Bytes
-    are the wrong proxy for an expensive opaque per-row stage, so the
-    group exchange is pinned with an explicit partition count
-    (REPARTITION_BY_NUM is exempt from AQE coalescing; hash or range
-    partitioning on the keys satisfies the applyInPandas
-    ClusteredDistribution, so no second exchange appears). n =
-    spark.sql.shuffle.partitions — conf-derived, scale-adaptive: at
-    cluster scale that conf is sized to the cluster, and the exchange it
-    pins replaces (not augments) the one the groupBy would insert anyway.
+    - The range partitioner never splits equal sort keys. Without
+      `split_on` every group therefore lands in one task whole.
+    - With `split_on=<position column>`, a group larger than one part
+      spans several tasks, split at sampled equal-frequency positions
+      (the reference's Part-2 re-split, SparkGA1.scala:241-242,
+      289-480, with no pre-pass), and `fn` sees each slice as a call of
+      its own. `fn` must then be position-local: its output over a
+      group must equal the union of its outputs over position-disjoint
+      slices of it.
+    - The exchange has an explicit partition count (REPARTITION_BY_NUM),
+      which AQE never coalesces, so an expensive Python stage is not
+      narrowed to a few tasks by a byte-size heuristic.
 
-    Group iteration (r13 optimization, guide §4.1/§4.2): applyInPandas
-    builds one Arrow batch + pandas frame PER GROUP in both directions —
-    measured ~20 ms/group of pure machinery on the sf0.1 variant-caller
-    stage (837 groups, 0.44 s of fn CPU inside ~17 task-seconds of
-    stage time). The same ClusteredDistribution is realized manually:
-    repartition on the group keys, sortWithinPartitions so groups
-    arrive contiguous, and ONE mapInPandas whose generator walks key
-    runs, buffering only the batch-spanning trailing run. fn still sees
-    exactly one group (or, with split_on, one group's slice) per call,
-    keys included — the applyInPandas contract; outputs concatenate per
-    input batch so the return path ships a few large Arrow batches
-    instead of one per group.
+    Groups arrive as contiguous runs of each Arrow batch. One
+    null-safe key-change scan per batch finds the runs (null keys
+    compare equal, as groupBy's do); every complete run goes to `fn`,
+    the last run is held back because it may continue in the next
+    batch, and the held run is flushed at the end. Outputs are
+    concatenated per batch, so the return path ships a few large Arrow
+    batches instead of one per group.
     """
     import numpy as np
 
     n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    group_cols = list(keys)
-    if split_on is None:
-        src, sort_cols = df.repartition(n_parts, *group_cols), group_cols
-    else:
-        sort_cols = [*group_cols, split_on]
-        src = df.repartitionByRange(n_parts, *sort_cols)
+    sort_cols = [*keys, *([split_on] if split_on else [])]
+
+    def call(runs: list[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        outs = [o for o in map(fn, runs) if o is not None and len(o)]
+        if outs:
+            yield pd.concat(outs, ignore_index=True)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: pd.DataFrame | None = None
-
-        def run_groups(pdf: pd.DataFrame) -> pd.DataFrame | None:
-            # rows arrive SORTED on group_cols (sortWithinPartitions
-            # below), so groups are contiguous runs: find run
-            # boundaries with one vectorized null-safe comparison per
-            # key column and slice, instead of pandas groupby hashing
-            # every row (r14, guide §4.2 — measured 16.5 → 10.7
-            # ms/batch on a 9.4k-row 26-group batch). Null keys
-            # compare equal to null, matching groupby(dropna=False).
-            n = len(pdf)
-            brk = np.zeros(n, dtype=bool)
-            for c in group_cols:
-                col = pdf[c].to_numpy()
-                neq = col[1:] != col[:-1]
-                if neq.dtype != bool:
-                    neq = neq.astype(bool)
-                na = pd.isna(col)
-                if na.any():
-                    neq &= ~(na[1:] & na[:-1])
-                brk[1:] |= neq
-            bounds = np.concatenate(
-                ([0], np.flatnonzero(brk), [n])
-            )
-            outs = []
-            for i in range(len(bounds) - 1):
-                o = fn(pdf.iloc[bounds[i]:bounds[i + 1]])
-                if o is not None and len(o):
-                    outs.append(o)
-            if not outs:
-                return None
-            return pd.concat(outs, ignore_index=True)
-
+        tail = None
         for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            buf = None
-            n = len(pdf)
-            if n == 0:
+            if tail is not None:
+                pdf = pd.concat([tail, pdf], ignore_index=True)
+            if not len(pdf):
                 continue
-            # the maximal suffix sharing the final row's key may continue
-            # into the next batch — hold it back, flush complete runs
-            suffix = np.ones(n, dtype=bool)
-            for c in group_cols:
+            new_run = np.zeros(len(pdf), dtype=bool)
+            for c in keys:
                 col = pdf[c].to_numpy()
-                eq = col == col[-1]
-                if eq.dtype != bool:  # object comparisons may stay object
-                    eq = eq.astype(bool)
                 na = pd.isna(col)
-                if na.any() and pd.isna(col[-1]):
-                    eq = eq | na
-                suffix &= eq
-            brk = np.nonzero(~suffix)[0]
-            start_last = int(brk[-1]) + 1 if len(brk) else 0
-            head, buf = pdf.iloc[:start_last], pdf.iloc[start_last:]
-            if len(head):
-                out = run_groups(head)
-                if out is not None:
-                    yield out
-        if buf is not None and len(buf):
-            out = run_groups(buf)
-            if out is not None:
-                yield out
+                neq = np.asarray(col[1:] != col[:-1], dtype=bool)
+                new_run[1:] |= neq & ~(na[1:] & na[:-1])
+            starts = [0, *np.flatnonzero(new_run)]
+            tail = pdf.iloc[starts[-1]:]
+            yield from call([pdf.iloc[a:b] for a, b in zip(starts, starts[1:])])
+        if tail is not None:
+            yield from call([tail])
 
-    return src.sortWithinPartitions(*sort_cols).mapInPandas(gen, schema=schema)
+    src = df.repartitionByRange(n_parts, *sort_cols).sortWithinPartitions(*sort_cols)
+    return src.mapInPandas(gen, schema=schema)
 
 
 def map_batches(

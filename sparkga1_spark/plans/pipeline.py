@@ -79,17 +79,17 @@ def call_variants_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     )[["chr_index", "reg", "pos", "depth", "avg_mapq"]]
 
 
-def variant_call_stage(binned: DataFrame, *, salt: bool = True) -> DataFrame:
-    """The per-(chr, reg) black-box stage. With `salt` (the default) the
-    rows are range-split on (chr, reg, pos), so a hot region spans tasks
-    at position boundaries; without it each region is one group. Depth
-    is position-local, so both give the same rows."""
+def variant_call_stage(binned: DataFrame) -> DataFrame:
+    """The per-(chr, reg) black-box stage: rows are range-split on
+    (chr_index, reg, pos), so a hot region spans tasks at position
+    boundaries. Pileup depth is position-local, so the rows equal a
+    one-group-per-region `applyInPandas` call."""
     return apply_per_group(
         binned.select("chr_index", "reg", "pos", "mapq"),
         keys=("chr_index", "reg"),
         fn=call_variants_pdf,
         schema=VARIANT_SCHEMA,
-        split_on="pos" if salt else None,
+        split_on="pos",
     )
 
 

@@ -1303,7 +1303,7 @@ def x_blackbox_variant_call(spark, sf_dir):
 
     al = filters.filter_unmapped(_alignments(spark, sf_dir))
     binned = binning.bin_by_region(al, _seq_dict(spark, sf_dir))
-    return variant_call_stage(binned, salt=True)
+    return variant_call_stage(binned)
 
 
 @query(
@@ -5022,7 +5022,7 @@ def x_ann_ivfpq_topk(spark, sf_dir):
     the PQ asymmetric-distance scan so each query scores only the
     candidates in its two probed clusters — Σ probed-cluster sizes ×
     4 subspaces instead of the corpus-wide ADC scan (flat PQ measured
-    candidate-linear, 98s at 100×, SCALE_SMOKE_r8). Seeded centroids
+    candidate-linear, 98s at a 100× corpus). Seeded centroids
     AND a seeded codebook keep the whole composition SQL-expressible,
     so this row value-checks assignment, probing, encoding, LUT, and
     integer-exact ADC ranking end-to-end; production swaps in
@@ -8752,7 +8752,7 @@ def x_simhash_longdoc_pairs(spark, sf_dir):
     the same plan holds with wider blocks (16-bit on the full 64-bit
     width) and per-block bucketing, the exact table layout Manku
     describes. Smoke: 1×/10× pair output is linear in planted-twin
-    count (SCALE_SMOKE_r5). Measured twin recall is pinned in
+    count. Measured twin recall is pinned in
     tests/test_properties.py."""
     from sparkga1_spark.operators.dedup import simhash_rows
 
@@ -12606,80 +12606,3 @@ def x_dedup_cluster_size_hist(spark, sf_dir):
         .unionAll(singleton)
         .orderBy("cluster_size")
     )
-
-
-# --------------------------------------------------------------------------
-# Gate priority (see registry.set_gate_order docstring). Round 14
-# (r13 VERDICT #1): the r13 optimizer rewrote 28 queries AFTER the
-# r13 rotation was fixed, so 18 rewritten queries were never
-# re-checked by the independent driver oracle. This window fronts
-# ALL 18 (semantics-affecting rewrites first), then fills the
-# remaining 32 slots from the oldest-first
-# candidate window (age histogram r9:25 r10:49 r11:49 r12:49 r13:50;
-# 7 of the 18 are themselves r9-age, so this window also retires
-# every remaining r9-age row).
-# --------------------------------------------------------------------------
-
-from sparkga1_spark.plans.registry import set_gate_order  # noqa: E402
-
-set_gate_order([
-    # (a) the 18 r13-optimizer-rewritten queries with no post-rewrite
-    # driver row (VERDICT r13 "what's wrong" #1), most semantically
-    # aggressive rewrites first: window→max-aggregate fold,
-    # aggregate-before-join, shuffle-hash forms, map-side gram
-    # rewrites, persist/pin restructurings
-    "a_dedup_keep_best",
-    "tpch_q18_large_orders",
-    "tpch_q5_local_supplier",
-    "tpch_q21_waiting_supplier",
-    "x_set_similarity_join",
-    "x_set_similarity_routed",
-    "x_graph_triangles",
-    "x_survival_km",
-    "x_rfm_segmentation",
-    "x_dedup_minhash_lsh",
-    "x_multimodal_webp_decode",
-    "x_knn_label_vote",
-    "x_ann_bruteforce_topk",
-    "x_curation_pipeline_v2",
-    "x_pack_context_windows",
-    "x_heaps_vocab_growth",
-    "x_token_budget_sample",
-    "x_crawl_ingest_pipeline",
-    # (b) the 22 remaining r9-age rows (oldest driver coverage left;
-    # oldest-first candidate order)
-    "x_drift_chi2",
-    "x_drift_psi",
-    "x_dsir_importance",
-    "x_embedding_neardup",
-    "x_entropy_per_doc",
-    "x_funnel_conversion",
-    "x_gapfill_locf",
-    "x_inverted_index",
-    "x_mix_temperature_weights",
-    "x_multimodal_decode",
-    "x_multimodal_jpeg_meta",
-    "x_multimodal_png_decode",
-    "x_per_source_cap",
-    "x_pq_encode",
-    "x_quality_quantile_filter",
-    "x_revenue_gini_lorenz",
-    "x_scd2_intervals",
-    "x_simhash_hamming_pairs",
-    "x_string_agg_sorted",
-    "x_tfidf_top_terms",
-    "x_unigram_logprob",
-    "x_vocab_oov_rate",
-    # (c) the 10 oldest r10-age rows (tool candidate order), filling
-    # the window to 50
-    "a_rollup_revenue",
-    "f_permissive_line_parse",
-    "s_paired_interleave",
-    "s_session_windows",
-    "s_sliding_avg",
-    "s_tumbling_counts",
-    "tpch_q17_small_quantity",
-    "tpch_q19_disjunctive",
-    "tpch_q20_excess_stock",
-    "tpch_q22_dormant_customers",
-])

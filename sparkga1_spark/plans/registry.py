@@ -38,44 +38,21 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-_GATE_ORDER: list[str] = []
-
-
-def set_gate_order(names: list[str]) -> None:
-    """Declare the gate priority order. The external driver caps its
-    correctness run at the FIRST 50 entries of queries() (observed: round
-    1 recorded rows for exactly registrations #1-50 of 69), so the
-    registry fronts (a) queries with no hard signal yet, (b) queries
-    whose semantics changed since their last green row, (c) north-star
-    queries — and leaves untouched-green queries in the tail, rotating
-    per round so every query keeps a current CORRECTNESS row. Unknown
-    names fail fast; unlisted queries follow in registration order."""
-    unknown = [n for n in names if n not in _QUERIES]
-    if unknown:
-        raise ValueError(f"gate order lists unregistered queries: {unknown}")
-    if len(set(names)) != len(names):
-        raise ValueError("gate order contains duplicates")
-    _GATE_ORDER[:] = names
-
-
 def _ensure_loaded() -> None:
     # Import side-effect modules that register queries.
     from sparkga1_spark.plans import queries as _q  # noqa: F401
 
 
-def _ordered(d: dict) -> dict:
-    head = {n: d[n] for n in _GATE_ORDER if n in d}
-    return head | {n: v for n, v in d.items() if n not in head}
-
-
 def all_queries() -> dict[str, QueryFn]:
+    """Every registered query, in registration order."""
     _ensure_loaded()
-    return _ordered(_QUERIES)
+    return dict(_QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
+    """Every registered oracle, in registration order."""
     _ensure_loaded()
-    return _ordered(_ORACLES)
+    return dict(_ORACLES)
 
 
 def get(name: str) -> tuple[QueryFn, str | None]:

@@ -59,16 +59,15 @@ def _default_driver_memory() -> str:
     return f"{max(1, min(16, total // 2**31))}g"
 
 
-def get_spark(app_name: str = "sparkga1_spark", *, cpus: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "sparkga1_spark") -> SparkSession:
     """Build (or reuse) the engine session.
 
-    local[$SPARK_GRAFT_CPUS] by default; shuffle partitions sized to the
-    core count (the reference's analogous knob is numRegions≈300 at
+    local[$SPARK_GRAFT_CPUS] (local[*] with 32 shuffle partitions when
+    it is unset); shuffle partitions sized to the core count (the reference's analogous knob is numRegions≈300 at
     cluster scale, README.md:94-95 — on a 1000-executor cluster this
     becomes a spark-submit conf, not code).
     """
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or None
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
     master = f"local[{cpus}]" if cpus else "local[*]"
     builder = (
         SparkSession.builder.master(master)

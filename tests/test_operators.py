@@ -55,9 +55,22 @@ def test_salt_by_quantiles_splits_heavy_keys(spark, sf_dir):
         assert max(ns) <= 3 * min(ns) + 50, f"key {key} buckets skewed: {ns}"
 
 
+def _per_region_call(binned):
+    """Spark's own per-group contract for the variant caller: one
+    `applyInPandas` call per whole (chr_index, reg) region."""
+    from sparkga1_spark.plans.pipeline import VARIANT_SCHEMA, call_variants_pdf
+
+    return (
+        binned.select("chr_index", "reg", "pos", "mapq")
+        .groupBy("chr_index", "reg")
+        .applyInPandas(call_variants_pdf, schema=VARIANT_SCHEMA)
+    )
+
+
 def test_salting_preserves_group_transform_results(spark, sf_dir):
-    """salted vs unsalted variant-call must be identical (position-local
-    transform distributes over position splits)."""
+    """The range-split variant call must equal one applyInPandas call
+    per whole region (a position-local transform distributes over
+    position splits)."""
     from sparkga1_spark.operators import binning, filters
     from sparkga1_spark.plans.pipeline import variant_call_stage
     from sparkga1_spark.sources import fixtures
@@ -66,16 +79,16 @@ def test_salting_preserves_group_transform_results(spark, sf_dir):
     al = filters.filter_unmapped(_alignments(spark, sf_dir))
     sd = fixtures.sequence_dict(load_table(spark, sf_dir, "nation"))
     binned = binning.bin_by_region(al, sd)
-    unsalted = {tuple(r) for r in variant_call_stage(binned, salt=False).collect()}
-    salted = {tuple(r) for r in variant_call_stage(binned, salt=True).collect()}
-    assert salted == unsalted
+    whole = {tuple(r) for r in _per_region_call(binned).collect()}
+    split = {tuple(r) for r in variant_call_stage(binned).collect()}
+    assert split == whole
 
 
 def test_range_split_spreads_hot_region_over_tasks(spark):
     """One (chr_index, reg) holding 60% of the rows, more than 1/n of
     them for n shuffle partitions: the range exchange must call it in
     several tasks, at position boundaries, and the result must equal
-    the one-group-per-region call row for row."""
+    one applyInPandas call per whole region, row for row."""
     from sparkga1_spark.plans.pipeline import variant_call_stage
 
     hot = F.col("id") % 10 < 6
@@ -88,8 +101,8 @@ def test_range_split_spreads_hot_region_over_tasks(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        split = variant_call_stage(binned, salt=True)
-        whole = variant_call_stage(binned, salt=False)
+        split = variant_call_stage(binned)
+        whole = _per_region_call(binned)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     tasks = (
@@ -293,7 +306,7 @@ def test_fastq_to_pipeline_end_to_end(spark, sf_dir, tmp_path):
     )
     sd = fixtures.sequence_dict(load_table(spark, sf_dir, "nation"))
     binned = binning.bin_by_region(aligned, sd)
-    called = variant_call_stage(binned, salt=True)
+    called = variant_call_stage(binned)
     stats = binned.groupBy("chr_index").count().collect()
     assert sum(r["count"] for r in stats) == 600
     # the called loci must equal a direct depth>=2 computation
@@ -1077,12 +1090,12 @@ def test_spread_if_narrow_fires_only_on_narrow_scans(spark, sf_dir):
 
 
 def test_apply_per_group_walk_matches_applyinpandas(spark):
-    """apply_per_group's mapInPandas group walk (r13, guide §4.1) must
-    be observationally identical to groupBy().applyInPandas: every
-    group seen exactly once with its key columns included — also when
-    a group spans Arrow batch boundaries (forced via a 7-row batch
-    size) — and null keys preserved (pandas groupby drops NaN keys by
-    default; the walk must not)."""
+    """apply_per_group's mapInPandas group walk must be observationally
+    identical to groupBy().applyInPandas: every group seen exactly once
+    with its key columns included — also when a group spans Arrow batch
+    boundaries (forced via a 7-row batch size) — null keys preserved
+    (pandas groupby drops NaN keys by default; the walk must not), and
+    empty outputs dropped. Its one exchange is a range exchange."""
     import pandas as pd
 
     from sparkga1_spark.operators.transform import apply_per_group
@@ -1113,19 +1126,31 @@ def test_apply_per_group_walk_matches_applyinpandas(spark):
             map(tuple, rows), key=lambda t: tuple((x is None, x) for x in t)
         )
 
-    old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        got = norm(
-            apply_per_group(df, keys=("k", "sub"), fn=fn, schema=schema).collect()
-        )
+    def fn_some_empty(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = fn(pdf)
+        return out.iloc[:0] if pdf["sub"].iloc[0] == 1 else out
+
+    def both(f):
+        walked = apply_per_group(df, keys=("k", "sub"), fn=f, schema=schema)
         want = norm(
             df.repartition(4, "k", "sub")
             .groupBy("k", "sub")
-            .applyInPandas(fn, schema=schema)
+            .applyInPandas(f, schema=schema)
             .collect()
         )
+        return walked, norm(walked.collect()), want
+
+    old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+        walked, got, want = both(fn)
+        _, got_some, want_some = both(fn_some_empty)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_batch)
     assert got == want
     assert len(got) == 8  # 4 k-values x 2 subs, null key included
+    assert got_some == want_some
+    assert len(got_some) == 4  # the sub == 1 groups returned nothing
+    plan = walked._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" in plan, plan
+    assert "hashpartitioning" not in plan, plan
