@@ -9123,225 +9123,3 @@ def plant_webp_lossless_payloads(df: DataFrame, *, text_col: str = "text") -> Da
             yield pd.DataFrame(out, columns=["doc_id", "payload"])
 
     return _planted(df, run, "doc_id long, payload binary")
-
-
-# --------------------------------------------------------------------------
-# Animated WebP (VP8X + ANIM/ANMF, the public container spec §Animation):
-# REAL multi-frame decode — each ANMF sub-image is a still (VP8L with
-# alpha / lossy VP8 + ALPH, both fully decoded above) rendered onto the
-# canvas with the spec's compositing model: the canvas starts fully
-# transparent; blending bit B=0 alpha-blends the frame over the canvas,
-# B=1 overwrites; disposal bit D=1 fills the frame rectangle with the
-# ANIM background color after the frame is captured. Lossless frames
-# make every composite EXACTLY computable — the pytest carries an
-# independently-written numpy compositor and hand-built expectations.
-# --------------------------------------------------------------------------
-
-
-def build_webp_anim(frames, canvas_w: int, canvas_h: int, *,
-                    bg=(255, 255, 255, 255), loop: int = 0) -> bytes:
-    """frames: list of (x, y, pixels HxWx3|HxWx4, duration_ms, blend,
-    dispose[, lossy]) → an animated WebP. Frame offsets must be even
-    (stored in 2-pixel units per the spec); sub-images are lossless
-    VP8L by default (exact pixels, alpha carried when given); a frame
-    tuple with a 7th truthy element encodes LOSSY instead — an ANMF
-    wrapping ALPH (when 4-channel) + VP8 chunks, the other wild-file
-    animation shape."""
-    import numpy as np
-
-    out = bytearray()
-    anim = bytes((bg[2], bg[1], bg[0], bg[3]))  # spec stores BGRA
-    anim += struct.pack("<H", loop)
-    out += _webp_chunk(b"ANIM", anim)
-    for frame in frames:
-        (x, y, px, dur, blend, dispose) = frame[:6]
-        lossy = frame[6] if len(frame) > 6 else False
-        if x % 2 or y % 2:
-            raise ValueError("webp: frame offsets must be even")
-        arr = np.asarray(px, np.uint8)
-        fh, fw = arr.shape[:2]
-        if lossy and arr.shape[2] == 4:
-            still = build_webp_vp8(
-                arr[:, :, :3], q_index=4, alpha=arr[:, :, 3]
-            )
-            # strip RIFF....WEBP (12) and the VP8X chunk (18): the
-            # ANMF carries only the ALPH + VP8 chunks
-            sub = still[12 + 18 :]
-        elif lossy:
-            still = build_webp_vp8(arr, q_index=4)
-            sub = still[12:]
-        else:
-            still = build_webp_lossless(arr)
-            sub = still[12:]  # the VP8L chunk (strip RIFF....WEBP)
-        def u24(v: int, what: str) -> bytes:
-            # ANMF stores 24-bit fields; pack('<I')[:3] would silently
-            # WRAP an out-of-range value into a plausible-but-wrong
-            # animation — refuse instead (matches the builder's other
-            # validations: even offsets, palette size)
-            if not 0 <= v < 1 << 24:
-                raise ValueError(f"webp: ANMF {what} {v} out of 24-bit range")
-            return struct.pack("<I", v)[:3]
-
-        hdr = (
-            u24(x >> 1, "frame x/2")
-            + u24(y >> 1, "frame y/2")
-            + u24(fw - 1, "frame width-1")
-            + u24(fh - 1, "frame height-1")
-            + u24(int(dur), "duration_ms")
-            + bytes([(0 if blend else 2) | (1 if dispose else 0)])
-        )
-        out += _webp_chunk(b"ANMF", hdr + sub)
-    if not (0 < canvas_w <= 1 << 24 and 0 < canvas_h <= 1 << 24):
-        raise ValueError("webp: canvas dims out of 24-bit range")
-    vp8x = bytes([0x02 | 0x10, 0, 0, 0]) + struct.pack(
-        "<I", canvas_w - 1
-    )[:3] + struct.pack("<I", canvas_h - 1)[:3]
-    total = _webp_chunk(b"VP8X", vp8x) + bytes(out)
-    return b"RIFF" + struct.pack("<I", 4 + len(total)) + b"WEBP" + total
-
-
-def parse_webp_animation(data: bytes):
-    """Animated WebP → (canvas_w, canvas_h, loop_count, bg_rgba,
-    [(duration_ms, HxWx4 uint8 composited canvas snapshot)]). Raises
-    ValueError on non-animations, mis-ordered chunks, frames escaping
-    the canvas, or undecodable sub-images — never a guessed frame."""
-    import numpy as np
-
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
-        raise ValueError("webp: bad container magic")
-    (riff_len,) = struct.unpack("<I", data[4:8])
-    if 8 + riff_len > len(data):
-        # a cut between chunks would otherwise silently DROP trailing
-        # frames — the declared length is the truncation gate
-        raise ValueError("webp: RIFF length overruns file")
-    pos, end = 12, 8 + riff_len
-    canvas = None
-    anim = None
-    frames = []
-    while pos + 8 <= end:
-        fourcc = data[pos : pos + 4]
-        (clen,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + clen]
-        if len(body) != clen:
-            raise ValueError("webp: chunk overruns file")
-        if fourcc == b"VP8X":
-            if clen != 10:
-                raise ValueError("webp: VP8X payload must be 10 bytes")
-            if not body[0] & 0x02:
-                raise ValueError("webp: animation flag not set")
-            canvas = (
-                int.from_bytes(body[4:7], "little") + 1,
-                int.from_bytes(body[7:10], "little") + 1,
-            )
-        elif fourcc == b"ANIM":
-            if clen != 6:
-                raise ValueError("webp: ANIM payload must be 6 bytes")
-            if canvas is None:
-                raise ValueError("webp: ANIM before VP8X")
-            anim = (
-                (body[2], body[1], body[0], body[3]),  # BGRA → RGBA
-                struct.unpack("<H", body[4:6])[0],
-            )
-        elif fourcc == b"ANMF":
-            if anim is None:
-                raise ValueError("webp: ANMF before ANIM")
-            if clen < 16:
-                raise ValueError("webp: ANMF header truncated")
-            fx = int.from_bytes(body[0:3], "little") * 2
-            fy = int.from_bytes(body[3:6], "little") * 2
-            fw = int.from_bytes(body[6:9], "little") + 1
-            fh = int.from_bytes(body[9:12], "little") + 1
-            dur = int.from_bytes(body[12:15], "little")
-            flags = body[15]
-            frames.append((fx, fy, fw, fh, dur, flags, bytes(body[16:])))
-        pos += 8 + clen + (clen % 2)
-    if canvas is None or anim is None:
-        raise ValueError("webp: not an animation (VP8X+ANIM required)")
-    if not frames:
-        raise ValueError("webp: animation carries no ANMF frames")
-    cw, ch = canvas
-    _check_raster_size(cw, ch, "WEBP-ANIM")
-    # bomb guard: each ANMF yields a full canvas snapshot, so the
-    # animation's TOTAL retained pixels is frames x canvas — a
-    # kilobyte-scale file declaring a max-size canvas plus N tiny
-    # frames would otherwise demand N x 256MB (the per-raster cap
-    # alone only bounds one canvas)
-    if len(frames) * cw * ch > _MAX_DECODE_PIXELS:
-        raise ValueError(
-            f"webp: animation demands {len(frames)}x{cw}x{ch} snapshot"
-            " pixels — beyond the decoder cap"
-        )
-    bg_rgba, loop = anim
-    out = np.zeros((ch, cw, 4), np.uint8)  # spec: start fully transparent
-    snaps = []
-    for fx, fy, fw, fh, dur, flags, sub in frames:
-        if fx + fw > cw or fy + fh > ch:
-            raise ValueError("webp: frame escapes the canvas")
-        # the sub-image is a standalone still: rewrap and reuse the
-        # full still-decode path (VP8L w/ alpha, or ALPH + VP8)
-        still = b"RIFF" + struct.pack("<I", 4 + len(sub)) + b"WEBP" + sub
-        sw, sh, spx = parse_webp_pixels(still)
-        if (sw, sh) != (fw, fh):
-            raise ValueError("webp: ANMF dims disagree with sub-image")
-        if spx.shape[2] == 3:
-            spx = np.dstack(
-                [spx, np.full((sh, sw), 255, np.uint8)]
-            )
-        region = out[fy : fy + fh, fx : fx + fw].astype(np.float64)
-        src = spx.astype(np.float64)
-        if flags & 2:  # no blending: overwrite
-            blended = src
-        else:  # alpha-blend source over canvas (spec formulas)
-            a_s = src[:, :, 3:4] / 255.0
-            a_d = region[:, :, 3:4] / 255.0
-            a_o = a_s + a_d * (1.0 - a_s)
-            safe = np.where(a_o == 0.0, 1.0, a_o)
-            rgb = (
-                src[:, :, :3] * a_s
-                + region[:, :, :3] * a_d * (1.0 - a_s)
-            ) / safe
-            blended = np.dstack(
-                [np.where(a_o == 0.0, 0.0, rgb), a_o * 255.0]
-            )
-        out[fy : fy + fh, fx : fx + fw] = np.clip(
-            np.round(blended), 0, 255
-        ).astype(np.uint8)
-        snaps.append((dur, out.copy()))
-        if flags & 1:  # dispose to background color
-            out[fy : fy + fh, fx : fx + fw] = np.array(bg_rgba, np.uint8)
-    return cw, ch, loop, bg_rgba, snaps
-
-
-def decode_animation_frames(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
-    """(doc_id, payload) → one row per animation frame (doc_id,
-    frame_idx, duration_ms, width, height, px_sum over the composited
-    RGBA canvas) — the REAL frame-sampling shape (1→N Arrow flatMap)
-    over animated WebP payloads; non-animations raise (callers filter
-    or plant animations)."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                cw, ch, _loop, _bg, snaps = parse_webp_animation(
-                    bytes(payload)
-                )
-                for i, (dur, canvas) in enumerate(snaps):
-                    out.append(
-                        (doc_id, i, int(dur), cw, ch,
-                         int(np.asarray(canvas, np.int64).sum()))
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "frame_idx", "duration_ms", "width",
-                         "height", "px_sum"],
-            )
-
-    _anim_schema = (
-        "doc_id long, frame_idx int, duration_ms int, "
-        "width int, height int, px_sum long"
-    )
-    if getattr(df, "_plant_fusion", None) is not None:
-        return _decode_map(df, run, _anim_schema)
-    return _spread(df).mapInPandas(run, schema=_anim_schema)

@@ -302,24 +302,6 @@ def _collect_centroids(
     return rows
 
 
-def _cent_vec_lookup(cent_rows: list, id_type, cluster_col: str = "cluster_id"):
-    """Literal-array centroid-vector lookup by cluster id — the
-    map-only expression `element_at(filter(cents, c.cid == cluster), 1)
-    .cv` used by the residual paths."""
-    cents_lit = F.array(
-        *[
-            F.struct(
-                F.lit(r["cid"]).cast(id_type).alias("cid"),
-                F.lit(r["cv"]).cast("array<double>").alias("cv"),
-            )
-            for r in cent_rows
-        ]
-    )
-    return F.element_at(
-        F.filter(cents_lit, lambda c: c["cid"] == F.col(cluster_col)), 1
-    )["cv"]
-
-
 def _ivf_scored(
     df: DataFrame,
     *,
@@ -329,7 +311,6 @@ def _ivf_scored(
     centroid_pred,
     nprobe: int,
     vectorized: bool | None,
-    cent_rows: list | None = None,
 ) -> DataFrame:
     """Shared IVF coarse-quantizer pass for `ivf_topk` and
     `ivfpq_topk`: pull the k-sized centroid model once at build time
@@ -340,11 +321,10 @@ def _ivf_scored(
     kernel, which is bit-identical to the expression fold (pinned by
     test_ivf_vectorized_matches_expression)."""
     id_type = df.schema[id_col].dataType
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            df, id_col=id_col, vec_col=vec_col, dim=dim,
-            centroid_pred=centroid_pred,
-        )
+    cent_rows = _collect_centroids(
+        df, id_col=id_col, vec_col=vec_col, dim=dim,
+        centroid_pred=centroid_pred,
+    )
     base = df.select(
         F.col(id_col),
         vectors.to_double(F.col(vec_col)).alias("_vd"),
@@ -428,15 +408,15 @@ def ivf_topk(
     The candidate-side assignment is MAP-ONLY (r2 VERDICT #5): the
     centroid set is pulled ONCE at build time (a k-sized model pull,
     the sanctioned pattern) and rides the scan as a LITERAL array of
-    (cent_id, vec, norm) structs — identical to ivf_topk_trained's
-    shape; each row picks array_min(struct(-cos, cent_id)) with no
-    Exchange and no join node between the scan and the cluster-id
-    column (plan-guarded in test_plans.py). The former 1-row
-    collect_list aggregate attached via join(broadcast(...)) was a
-    BroadcastNestedLoopJoin whose build side replicated the centroid
-    scan into both persisted-subtree consumers (2 BNLs per query in
-    the r7 plan audit — r7 VERDICT #2). The former Window.partitionBy
-    (id) shuffled the whole n×n_cent scored stream just to take rn=1.
+    (cent_id, vec, norm) structs; each row picks
+    array_min(struct(-cos, cent_id)) with no Exchange and no join node
+    between the scan and the cluster-id column (plan-guarded in
+    test_plans.py). The former 1-row collect_list aggregate attached
+    via join(broadcast(...)) was a BroadcastNestedLoopJoin whose build
+    side replicated the centroid scan into both persisted-subtree
+    consumers (2 BNLs per query in the r7 plan audit — r7 VERDICT #2).
+    The former Window.partitionBy(id) shuffled the whole n×n_cent
+    scored stream just to take rn=1.
     The nprobe>1 probe list (query side only, a bounded set) is an
     array_sort + slice over the same scored array — still no window.
 
@@ -488,152 +468,6 @@ def ivf_topk(
     )
 
 
-def kmeans_fit(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int,
-    k: int = 8,
-    iters: int = 5,
-) -> list[list[float]]:
-    """Distributed Lloyd's k-means over an embedding column — the
-    trained-centroid source for `ivf_topk` (upgrading its documented
-    seed-centroid stand-in; plan shape downstream is unchanged).
-
-    Per iteration ONE job with map-side combine: each row computes its
-    nearest centroid (squared-L2 over broadcast literal centroids,
-    deterministic lowest-index tiebreak via struct array_min), then a
-    k-row aggregate of per-dimension sums — the shuffle carries
-    k×(dim+1) partial values PER PARTITION, independent of row count,
-    which is the 100 TB shape (MLlib's treeAggregate equivalently).
-    Init is deterministic: the k lowest-id vectors. Empty clusters keep
-    their previous centroid. Iterative and float-summation-order
-    dependent → verified by pytest against a numpy reference, not a SQL
-    oracle (the one algorithm class the oracle gate exempts)."""
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        vectors.to_double(F.col(vec_col)).alias("_v"),
-    )
-    init_rows = base.orderBy("_id").limit(k).collect()
-    if not init_rows:
-        raise ValueError("kmeans_fit: input has no rows")
-    # fewer rows than requested clusters: shrink k (the empty-cluster
-    # fallback below indexes cents[i], which must exist for every i)
-    k = min(k, len(init_rows))
-    cents: list[list[float]] = [list(r._v) for r in init_rows]
-
-    for _ in range(iters):
-        cent_arrs = [
-            F.array(*[F.lit(float(x)) for x in c]) for c in cents
-        ]
-        dists = [
-            F.aggregate(
-                F.zip_with(F.col("_v"), ca, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            )
-            for ca in cent_arrs
-        ]
-        choice = F.array_min(
-            F.array(
-                *[
-                    F.struct(d.alias("d"), F.lit(i).alias("i"))
-                    for i, d in enumerate(dists)
-                ]
-            )
-        )["i"]
-        rows = (
-            base.withColumn("_c", choice)
-            .groupBy("_c")
-            .agg(
-                F.count("*").alias("_n"),
-                *[
-                    F.sum(F.element_at("_v", j + 1)).alias(f"_s{j}")
-                    for j in range(dim)
-                ],
-            )
-            .collect()
-        )
-        by_cluster = {r["_c"]: r for r in rows}
-        cents = [
-            [by_cluster[i][f"_s{j}"] / by_cluster[i]["_n"] for j in range(dim)]
-            if i in by_cluster
-            else cents[i]
-            for i in range(k)
-        ]
-    return cents
-
-
-def ivf_topk_trained(
-    df: DataFrame,
-    centroids: list[list[float]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int,
-    query_pred,
-    k: int = 3,
-    nprobe: int = 1,
-) -> DataFrame:
-    """IVF-flat search against TRAINED centroids (from kmeans_fit):
-    assign every vector to its nearest centroid (squared-L2, lowest-index
-    tiebreak, map-only literal argmin), then each query searches its
-    `nprobe` nearest clusters (array_sort + slice over the same scored
-    structs — windowless, like `ivf_topk`) — identical equi-join plan
-    shape as `ivf_topk`, so everything PLANS.md says about its scale
-    behavior carries over."""
-    base = df.select(
-        F.col(id_col),
-        vectors.to_double(F.col(vec_col)).alias("_vd"),
-        vectors.norm(F.col(vec_col), dim).alias("_vn"),
-    )
-    cent_arrs = [F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    dists = [
-        F.aggregate(
-            F.zip_with(F.col("_vd"), ca, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        )
-        for ca in cent_arrs
-    ]
-    scored = F.array(
-        *[F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(dists)]
-    )
-    assigned = tracked_persist(  # query side + candidate side
-        base.withColumn("_sc", scored).withColumn(
-            "cluster_id", F.array_min("_sc")["i"]
-        )
-    )
-    q = (
-        assigned.filter(query_pred)
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.explode(F.slice(F.array_sort("_sc"), 1, nprobe)).alias("_p"),
-            F.col("_vd").alias("_qv"),
-            F.col("_vn").alias("_qn"),
-        )
-        .select("query_id", F.col("_p")["i"].alias("cluster_id"), "_qv", "_qn")
-    )
-    pairs = assigned.drop("_sc").join(q, on="cluster_id").filter(
-        F.col("query_id") != F.col(id_col)
-    )  # _sc (k structs/row) must not ride the candidate-side shuffle
-    topk = pairs.withColumn(
-        "cos_sim",
-        hround(
-            vectors.dot(F.col("_qv"), F.col("_vd"), dim)
-            / (F.col("_qn") * F.col("_vn")),
-            6,
-        ),
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), id_col)
-    return (
-        topk.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("cand_id"), "cos_sim", "rank")
-    )
-
-
 def pq_adc_topk(
     emb: DataFrame,
     *,
@@ -661,9 +495,8 @@ def pq_adc_topk(
     Scale shape: codebook and LUT broadcast (both tiny); encode and
     scoring are broadcast joins + partial/final aggregates keyed by
     (id, subspace) and (query, id); the top-k cut is a
-    WindowGroupLimit. Recall depends on codebook quality — train one
-    with kmeans_fit per subspace for real data; planted-twin recall is
-    measured in tests/test_ann_recall.py."""
+    WindowGroupLimit. Recall depends on codebook quality; planted-twin
+    recall is measured in tests/test_ann_recall.py."""
     from pyspark.sql import Window
 
     from sparkga1_spark.functions.numeric import hround
@@ -735,227 +568,6 @@ def pq_adc_topk(
     )
 
 
-def train_pq_codebooks(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_subspaces: int = 4,
-    sub_dim: int = 16,
-    n_codes: int = 4,
-    iters: int = 3,
-) -> list[list[list[float]]]:
-    """Per-subspace k-means codebooks for product quantization —
-    `kmeans_fit` on each sub_dim slice of the embedding (the trained
-    upgrade over `pq_adc_topk`'s seeded data-row codebook; same
-    training shape as `ivf_topk_trained`). Returns
-    codebooks[subspace][code] = centroid (len sub_dim). Cost:
-    n_subspaces × kmeans_fit, each a per-iteration k×(dim+1) partial
-    aggregate — independent of row count, the 100 TB shape. The
-    double-cast projection is persisted ONCE up front: every subspace
-    slice and every Lloyd iteration reads the cache instead of
-    re-scanning the source (~n_subspaces·(iters+1) scans otherwise —
-    the module's tracked_persist convention for multiply-consumed
-    inputs). Like kmeans_fit, float-iterative → pytest-pinned recall
-    (tests/test_ann_recall.py), not SQL-oracle-gated."""
-    from sparkga1_spark.operators.cache import tracked_persist
-
-    base = tracked_persist(
-        df.select(F.col(id_col), vectors.to_double(F.col(vec_col)).alias("_v"))
-    )
-    books: list[list[list[float]]] = []
-    for s in range(n_subspaces):
-        sub = base.select(
-            F.col(id_col),
-            F.slice(F.col("_v"), s * sub_dim + 1, sub_dim).alias("_sub"),
-        )
-        books.append(
-            kmeans_fit(
-                sub,
-                id_col=id_col,
-                vec_col="_sub",
-                dim=sub_dim,
-                k=n_codes,
-                iters=iters,
-            )
-        )
-    return books
-
-
-def _pq_encode_vectorized(
-    frame: DataFrame,
-    codebooks: list[list[list[float]]],
-    sub_dim: int,
-    id_col: str,
-    carry_cols: tuple = (),
-    residual_cents: dict | None = None,
-    cluster_col: str = "cluster_id",
-) -> DataFrame:
-    """Arrow-batched numpy PQ encode (r9) — the r8 IVF-assignment
-    lesson applied to the other Catalyst-HOF wall: the literal-
-    expression encode evaluates n_subspaces × n_codes × sub_dim
-    interpreted ops per row (~1024 for 4×16×16), measured as the
-    dominant cost of the trained ADC path at 100× (encode ≈ 70s of
-    the flat scan's 122s). The kernel replicates the expression fold
-    BIT-FOR-BIT: per-dimension sequential accumulation `acc += d_j²`
-    in dim order (one multiply + one add per element, the exact
-    zip_with/aggregate left fold), the same floor(x·1e6+0.5)/1e6
-    hround then floor(h·1e6+0.5) micro-unit snap on doubles, and
-    argmin taking the FIRST minimum (= lowest code, the array_min
-    struct tiebreak). Pinned by
-    test_pq_encode_vectorized_matches_expression. Emits one
-    (id [, carry...], subspace, code) row per (row, subspace)."""
-    import numpy as np
-
-    books = [np.array(b, dtype=np.float64) for b in codebooks]
-    fields = {f.name: f.dataType.simpleString() for f in frame.schema.fields}
-    cols = [id_col, *carry_cols]
-    schema = ", ".join(f"{c} {fields[c]}" for c in cols)
-    schema += ", subspace int, code int"
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["_vd"].tolist(), dtype=np.float64)
-            if residual_cents is not None:
-                # residual coding (r9): one subtraction per element —
-                # bit-identical to the zip_with(p - q) expression
-                C = np.array(
-                    [residual_cents[c] for c in pdf[cluster_col]],
-                    dtype=np.float64,
-                )
-                V = V - C
-            n = len(pdf)
-            parts = []
-            for s, B in enumerate(books):
-                X = V[:, s * sub_dim : (s + 1) * sub_dim]
-                dm = np.empty((n, len(B)), dtype=np.int64)
-                for c in range(len(B)):
-                    acc = np.zeros(n, dtype=np.float64)
-                    for j in range(sub_dim):
-                        dj = X[:, j] - B[c, j]
-                        acc += dj * dj
-                    h = np.floor(acc * 1e6 + 0.5) / 1e6
-                    dm[:, c] = np.floor(h * 1e6 + 0.5).astype(np.int64)
-                out = {c_: pdf[c_] for c_ in cols}
-                out["subspace"] = np.full(n, s, dtype=np.int32)
-                out["code"] = np.argmin(dm, axis=1).astype(np.int32)
-                parts.append(pd.DataFrame(out))
-            yield pd.concat(parts, ignore_index=True)
-
-    return frame.mapInPandas(run, schema=schema)
-
-
-def pq_adc_topk_trained(
-    emb: DataFrame,
-    codebooks: list[list[list[float]]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_pred: Column,
-    sub_dim: int = 16,
-    k: int = 3,
-    vectorized: bool | None = None,
-) -> DataFrame:
-    """PQ-ADC top-k against TRAINED literal codebooks (from
-    `train_pq_codebooks`). Differences from `pq_adc_topk`'s seeded
-    variant: encode is MAP-ONLY — each row computes its per-subspace
-    argmin over broadcast literal centroids (array_min over (distance,
-    code) structs, the `ivf_topk_trained` assignment shape) with no
-    codebook join at all — and the per-query LUT is likewise built
-    from literals. Scoring is the same (subspace, code) broadcast
-    equi-join + exact integer micro-unit sums with an id tiebreak, so
-    everything PLANS.md says about the ADC scan's scale behavior
-    carries over; the only new cost is n_subspaces × n_codes literal
-    arrays in the plan (tiny)."""
-
-    def _dmicro(xvec: Column, cent: list[float]) -> Column:
-        ca = F.array(*[F.lit(float(x)) for x in cent])
-        diff = F.zip_with(xvec, ca, lambda p, q: p - q)
-        dist = F.aggregate(
-            F.zip_with(diff, diff, lambda p, q: p * q),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.floor(hround(dist, 6) * 1_000_000 + 0.5).cast("long")
-
-    base = emb.select(
-        F.col(id_col), vectors.to_double(F.col(vec_col)).alias("_vd")
-    )
-    # corpus ENCODE: auto-switch to the Arrow/numpy kernel past the
-    # HOF-interpreter wall (r9 — 4x16x16 literal expressions per row
-    # dominated the 100x trained-ADC cost; bit-identity pinned by
-    # test_pq_encode_vectorized_matches_expression)
-    use_np = vectorized if vectorized is not None else (
-        sum(len(b) for b in codebooks) * sub_dim >= 512
-    )
-    if use_np:
-        codes = _pq_encode_vectorized(base, codebooks, sub_dim, id_col)
-    else:
-        code_structs = []
-        for s, book in enumerate(codebooks):
-            xvec = F.slice(F.col("_vd"), s * sub_dim + 1, sub_dim)
-            best = F.array_min(
-                F.array(
-                    *[
-                        F.struct(
-                            _dmicro(xvec, cent).alias("d"),
-                            F.lit(c).alias("c"),
-                        )
-                        for c, cent in enumerate(book)
-                    ]
-                )
-            )
-            code_structs.append(
-                F.struct(F.lit(s).alias("subspace"), best["c"].alias("code"))
-            )
-        codes = base.select(
-            id_col, F.explode(F.array(*code_structs)).alias("_sc")
-        ).select(id_col, F.col("_sc.subspace"), F.col("_sc.code"))
-
-    lut_structs = [
-        F.struct(
-            F.lit(s).alias("subspace"),
-            F.lit(c).alias("code"),
-            _dmicro(F.slice(F.col("_vd"), s * sub_dim + 1, sub_dim), cent).alias(
-                "_dm"
-            ),
-        )
-        for s, book in enumerate(codebooks)
-        for c, cent in enumerate(book)
-    ]
-    lut = (
-        base.filter(query_pred)
-        .select(
-            F.col(id_col).alias("_qid"),
-            F.explode(F.array(*lut_structs)).alias("_l"),
-        )
-        .select("_qid", "_l.subspace", "_l.code", "_l._dm")
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["subspace", "code"])
-        .filter(F.col(id_col) != F.col("_qid"))
-        .groupBy(
-            F.col("_qid").alias("query_id"), F.col(id_col).alias("cand_id")
-        )
-        .agg(F.sum("_dm").alias("d_micro"))
-    )
-    w = Window.partitionBy("query_id").orderBy("d_micro", "cand_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "cand_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("d_micro").cast("long").alias("d_micro"),
-        )
-    )
-
-
 def ivfpq_topk(
     emb: DataFrame,
     *,
@@ -989,14 +601,13 @@ def ivfpq_topk(
     (query, subspace, code), and sums exact integer micro-units. This
     seeded variant (data-row centroids + data-row codebook) is fully
     SQL-expressible, so the driver oracle checks the whole composition
-    value-for-value; swap `centroid_pred` rows for kmeans_fit output
-    and the codebook for train_pq_codebooks in production — plan shape
-    unchanged. NOTE the honest simplification vs. the paper: codes
-    quantize the RAW vector, not the residual (v − centroid); residual
-    encoding is a map-only subtraction away but would put float
-    subtraction ahead of the oracle's integer pipeline — recall floors
-    for this variant are pinned in tests/test_ann_recall.py alongside
-    the flat-PQ rows."""
+    value-for-value; trained centroids and codebooks would leave the
+    plan shape unchanged. NOTE the honest simplification vs. the
+    paper: codes quantize the RAW vector, not the residual
+    (v − centroid); residual encoding is a map-only subtraction away
+    but would put float subtraction ahead of the oracle's integer
+    pipeline — recall floors for this variant are pinned in
+    tests/test_ann_recall.py alongside the flat-PQ rows."""
     from pyspark.sql import Window
 
     scored = _ivf_scored(
@@ -1086,233 +697,6 @@ def ivfpq_topk(
     )
 
 
-def ivfpq_topk_trained(
-    emb: DataFrame,
-    codebooks: list[list[list[float]]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int,
-    centroid_pred,
-    query_pred,
-    sub_dim: int = 16,
-    k: int = 3,
-    nprobe: int = 1,
-    vectorized: bool | None = None,
-    residual: bool = False,
-) -> DataFrame:
-    """`ivfpq_topk` with TRAINED literal codebooks (from
-    `train_pq_codebooks`) — the full production IVFADC shape: IVF
-    routing bounds the candidate pool at Σ probed-cluster sizes, the
-    trained quantizer keeps ranking quality (flat trained-PQ recall
-    0.975 on the planted fixture), and encode/LUT are MAP-ONLY literal
-    argmins exactly as `pq_adc_topk_trained` (no codebook join).
-
-    `residual=True` is the paper's actual IVFADC: codes quantize
-    v − centroid(v) instead of v (train the books on `ivf_residuals`
-    output), and each query builds one LUT PER PROBED CLUSTER from
-    q − centroid_c — keyed (query, cluster, subspace, code), so the
-    ADC join routes on cluster implicitly. Residual coding resolves
-    WITHIN-cluster structure the raw quantizer wastes its budget on
-    (measured on the clustered pytest fixture:
-    test_ivfpq_residual_beats_raw_on_clustered_data); on
-    structureless uniform data the two are comparable. Plan shape is
-    unchanged — the residual is one extra map-only zip_with (or a
-    vectorized subtraction inside the encode kernel, bit-identical).
-
-    Float-iterative k-means upstream → pytest-pinned recall floors
-    (tests/test_ann_recall.py), not SQL-oracle-gated; the seeded
-    `ivfpq_topk` gate row certifies the routing/ADC arithmetic
-    value-for-value."""
-
-    def _dmicro(xvec: Column, cent: list[float]) -> Column:
-        ca = F.array(*[F.lit(float(x)) for x in cent])
-        diff = F.zip_with(xvec, ca, lambda p, q: p - q)
-        dist = F.aggregate(
-            F.zip_with(diff, diff, lambda p, q: p * q),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.floor(hround(dist, 6) * 1_000_000 + 0.5).cast("long")
-
-    id_type = emb.schema[id_col].dataType
-    cent_rows = _collect_centroids(
-        emb, id_col=id_col, vec_col=vec_col, dim=dim,
-        centroid_pred=centroid_pred,
-    )
-    scored = _ivf_scored(
-        emb,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        centroid_pred=centroid_pred,
-        nprobe=nprobe,
-        vectorized=vectorized,
-        cent_rows=cent_rows,
-    )
-    # the vector the codes quantize: raw, or the residual against the
-    # row's ASSIGNED centroid (map-only literal lookup)
-    enc_vec = (
-        F.zip_with(
-            F.col("_vd"),
-            _cent_vec_lookup(cent_rows, id_type),
-            lambda p, q: p - q,
-        )
-        if residual
-        else F.col("_vd")
-    )
-    # corpus ENCODE: same kernel auto-switch as pq_adc_topk_trained
-    # (the assignment already switched inside _ivf_scored)
-    use_np = vectorized if vectorized is not None else (
-        sum(len(b) for b in codebooks) * sub_dim >= 512
-    )
-    if use_np:
-        codes = _pq_encode_vectorized(
-            scored.select(id_col, "cluster_id", "_vd"),
-            codebooks, sub_dim, id_col, carry_cols=("cluster_id",),
-            residual_cents=(
-                {r["cid"]: list(r["cv"]) for r in cent_rows}
-                if residual else None
-            ),
-        )
-    else:
-        enc = scored.select(id_col, "cluster_id", enc_vec.alias("_ev"))
-        code_structs = []
-        for s, book in enumerate(codebooks):
-            xvec = F.slice(F.col("_ev"), s * sub_dim + 1, sub_dim)
-            best = F.array_min(
-                F.array(
-                    *[
-                        F.struct(
-                            _dmicro(xvec, cent).alias("d"), F.lit(c).alias("c")
-                        )
-                        for c, cent in enumerate(book)
-                    ]
-                )
-            )
-            code_structs.append(
-                F.struct(F.lit(s).alias("subspace"), best["c"].alias("code"))
-            )
-        codes = enc.select(
-            id_col, "cluster_id", F.explode(F.array(*code_structs)).alias("_sc")
-        ).select(id_col, "cluster_id", F.col("_sc.subspace"), F.col("_sc.code"))
-
-    q_rows = scored.filter(query_pred)
-    if residual:
-        # one LUT per (query, PROBED cluster): q − centroid_c, keyed so
-        # the ADC join routes on cluster implicitly
-        qp = q_rows.select(
-            F.col(id_col).alias("_qid"),
-            F.col("_vd"),
-            F.explode("_probes").alias("cluster_id"),
-        ).withColumn(
-            "_ev",
-            F.zip_with(
-                F.col("_vd"),
-                _cent_vec_lookup(cent_rows, id_type),
-                lambda p, q: p - q,
-            ),
-        )
-        lut_structs = [
-            F.struct(
-                F.lit(s).alias("subspace"),
-                F.lit(c).alias("code"),
-                _dmicro(
-                    F.slice(F.col("_ev"), s * sub_dim + 1, sub_dim), cent
-                ).alias("_dm"),
-            )
-            for s, book in enumerate(codebooks)
-            for c, cent in enumerate(book)
-        ]
-        lut = qp.select(
-            "_qid", "cluster_id", F.explode(F.array(*lut_structs)).alias("_l")
-        ).select("_qid", "cluster_id", "_l.subspace", "_l.code", "_l._dm")
-        adc = (
-            codes.join(F.broadcast(lut), ["cluster_id", "subspace", "code"])
-            .filter(F.col(id_col) != F.col("_qid"))
-            .groupBy(
-                F.col("_qid").alias("query_id"), F.col(id_col).alias("cand_id")
-            )
-            .agg(F.sum("_dm").alias("d_micro"))
-        )
-    else:
-        lut_structs = [
-            F.struct(
-                F.lit(s).alias("subspace"),
-                F.lit(c).alias("code"),
-                _dmicro(
-                    F.slice(F.col("_vd"), s * sub_dim + 1, sub_dim), cent
-                ).alias("_dm"),
-            )
-            for s, book in enumerate(codebooks)
-            for c, cent in enumerate(book)
-        ]
-        lut = q_rows.select(
-            F.col(id_col).alias("_qid"),
-            F.explode(F.array(*lut_structs)).alias("_l"),
-        ).select("_qid", "_l.subspace", "_l.code", "_l._dm")
-        probes = q_rows.select(
-            F.col(id_col).alias("_qid"), F.explode("_probes").alias("cluster_id")
-        )
-        adc = (
-            codes.join(F.broadcast(probes), "cluster_id")
-            .filter(F.col(id_col) != F.col("_qid"))
-            .join(F.broadcast(lut), ["_qid", "subspace", "code"])
-            .groupBy(
-                F.col("_qid").alias("query_id"), F.col(id_col).alias("cand_id")
-            )
-            .agg(F.sum("_dm").alias("d_micro"))
-        )
-    w = Window.partitionBy("query_id").orderBy("d_micro", "cand_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "cand_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("d_micro").cast("long").alias("d_micro"),
-        )
-    )
-
-
-def ivf_residuals(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int,
-    centroid_pred,
-    vectorized: bool | None = None,
-) -> DataFrame:
-    """(id, cluster_id, _res) — each vector minus its ASSIGNED IVF
-    centroid, map-only (the literal-array lookup over the k-sized
-    model). Feed this to `train_pq_codebooks(..., vec_col="_res")` to
-    train residual codebooks for `ivfpq_topk_trained(residual=True)`
-    — the paper's IVFADC training shape: the quantizer spends its
-    budget on within-cluster structure instead of re-describing the
-    coarse geometry the centroids already capture."""
-    id_type = df.schema[id_col].dataType
-    cent_rows = _collect_centroids(
-        df, id_col=id_col, vec_col=vec_col, dim=dim,
-        centroid_pred=centroid_pred,
-    )
-    scored = _ivf_scored(
-        df, id_col=id_col, vec_col=vec_col, dim=dim,
-        centroid_pred=centroid_pred, nprobe=1, vectorized=vectorized,
-        cent_rows=cent_rows,
-    )
-    return scored.select(
-        id_col,
-        "cluster_id",
-        F.zip_with(
-            F.col("_vd"),
-            _cent_vec_lookup(cent_rows, id_type),
-            lambda p, q: p - q,
-        ).alias("_res"),
-    )
-
-
 def pca_components(
     df: DataFrame, *, vec_col: str = "embedding", k: int = 8
 ):
@@ -1324,7 +708,8 @@ def pca_components(
     with Chan's parallel covariance update (numerically stable where
     the naive single-scan E[xxᵀ]−μμᵀ form cancels catastrophically on
     near-constant dimensions), and the d×d matrix is eigendecomposed
-    there (the documented kmeans_fit model-pull pattern). Returns
+    there (the sanctioned k-sized model-pull pattern of
+    `_collect_centroids`). Returns
     (mean: list[d], eigenvalues desc: list[d], components: list[k] of
     list[d]).
 

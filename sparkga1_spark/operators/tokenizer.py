@@ -23,11 +23,8 @@ EXACTLY ONCE (the word-frequency aggregate, the same shuffle
 x_vocab_topk pays); every merge round then runs over the vocabulary
 table only — millions of rows, not the corpus — and the driver pulls
 ONE small argmax result per round (the k-means-precedent collect
-size). The sequential trainer is one Spark job per merge — fine for
-audit-scale rounds, unusable for a real 32k-merge vocabulary; the
-BATCHED trainer (bpe_train_merges_batched) merges up to m
-symbol-disjoint pairs per count, cutting the sequential-job count to
-~rounds/m (envelope note in PLANS.md).
+size). The trainer is one Spark job per merge — fine for
+audit-scale rounds, unusable for a real 32k-merge vocabulary.
 """
 
 from __future__ import annotations
@@ -146,88 +143,6 @@ def bpe_train_merges(
     _, merges = _bpe_rounds(word_freq, rounds)
     return spark.createDataFrame(
         merges, "rnd int, pair string, merged string, wcount long"
-    )
-
-
-def _admit_disjoint_batch(
-    candidates: list[tuple[str, int]], m: int
-) -> list[tuple[str, int]]:
-    """Greedy within-round admission for the batched trainer: keep up
-    to `m` pairs, in candidate order, such that each kept pair's two
-    input symbols AND its merged output symbol are untouched by every
-    earlier keep. Tracking the merged outputs too is what makes the
-    disjointness invariant actually hold (r7 ADVICE): with inputs-only
-    tracking, a kept ('ab','x') could coexist with ('a','b') in the
-    same round — applying ('a','b') first creates new 'ab' symbols the
-    later merge would also consume, making application order material
-    and the recorded wcount stale."""
-    used: set[str] = set()
-    kept: list[tuple[str, int]] = []
-    for pr, cnt in candidates:
-        a, b = pr.split(" ")
-        merged_sym = a + b
-        if a in used or b in used or merged_sym in used:
-            continue
-        used.update((a, b, merged_sym))
-        kept.append((pr, cnt))
-        if len(kept) == m:
-            break
-    return kept
-
-
-def bpe_train_merges_batched(
-    spark: SparkSession,
-    word_freq: DataFrame,
-    rounds: int = 5,
-    m: int = 8,
-) -> DataFrame:
-    """Batched trainer (r6 VERDICT #5): per COUNT, merge up to `m`
-    pairwise symbol-disjoint pairs instead of one, so a real 32k-merge
-    vocabulary costs ~32k/m sequential Spark jobs instead of 32k.
-
-    Per round: one pair-count job; the driver pulls the top 4·m rows
-    (deterministic cnt desc, pr order) and greedily keeps pairs whose
-    BOTH symbols — and whose MERGED OUTPUT symbol — are untouched by
-    earlier keeps in this round. Tracking the merged outputs too is
-    what makes the disjointness claim actually hold (r7 ADVICE): with
-    inputs-only tracking, a kept ('ab','x') could coexist with
-    ('a','b') in the same round, and applying ('a','b') first creates
-    new 'ab' symbols the later merge would also consume — making
-    application order material and the recorded wcount stale.
-    With full tracking the kept merges neither invalidate each other's
-    counts nor interact when applied (their wrapped patterns cannot
-    overlap), so within-round application order is immaterial and each
-    recorded wcount is still the true count that justified the merge.
-    With m=1 this is EXACTLY the sequential trainer (agreement pinned
-    by pytest). With m>1 the learned merge sequence may legitimately
-    diverge from sequential where a merge would have created a new
-    dominant pair mid-batch — the classic batched-BPE approximation,
-    documented rather than hidden.
-
-    Output adds `k` (rank within the round) to the sequential schema.
-    """
-    if m < 1:
-        raise ValueError("bpe: batch size m must be >= 1")
-    wf = _prepare(word_freq)
-    merges = []
-    for rnd in range(1, rounds + 1):
-        top = (
-            _pair_counts(wf)
-            .orderBy(F.desc("cnt"), "pr")
-            .limit(4 * m)
-            .collect()
-        )
-        if not top:
-            break
-        kept = _admit_disjoint_batch(
-            [(row.pr, int(row.cnt)) for row in top], m
-        )
-        for k, (pr, cnt) in enumerate(kept, start=1):
-            merged = pr.replace(" ", "")
-            merges.append((rnd, k, pr, merged, cnt))
-            wf = _apply_merge(wf, pr, merged)
-    return spark.createDataFrame(
-        merges, "rnd int, k int, pair string, merged string, wcount long"
     )
 
 

@@ -5025,9 +5025,8 @@ def x_ann_ivfpq_topk(spark, sf_dir):
     candidate-linear, 98s at a 100× corpus). Seeded centroids
     AND a seeded codebook keep the whole composition SQL-expressible,
     so this row value-checks assignment, probing, encoding, LUT, and
-    integer-exact ADC ranking end-to-end; production swaps in
-    kmeans_fit centroids / train_pq_codebooks with the identical plan
-    shape (recall floors in tests/test_ann_recall.py). nprobe=all
+    integer-exact ADC ranking end-to-end (recall floors in
+    tests/test_ann_recall.py). nprobe=all
     equals flat PQ exactly (test_ivfpq_nprobe_all_equals_flat_pq) —
     the routing only ever REMOVES candidates."""
     from sparkga1_spark.operators.similarity import ivfpq_topk
@@ -8822,9 +8821,8 @@ def x_pq_encode(spark, sf_dir):
     64-dim vector becomes 4 one-byte codes): split each embedding into
     4×16-dim subspaces, assign each slice to its nearest of 4
     codebook centroids (deterministic codebook = the slices of
-    vec_id 0-3, the seeded-codebook analog of the IVF seed variant;
-    k-means-trained codebooks slot in via similarity.kmeans_fit
-    exactly like ivf_topk_trained). Distances are the sequential
+    vec_id 0-3, the seeded-codebook analog of the IVF seed variant).
+    Distances are the sequential
     (p-q)² fold both engines compute identically (functions/vectors
     lesson), rounded to 6dp BEFORE the argmin with a code tiebreak so
     assignment can't flip on last-ulp noise; per-vector quantization
@@ -9171,8 +9169,7 @@ def x_host_pagerank(spark, sf_dir):
     uniformly — is (Σ_dangling v · 85) div (100·N) — so the
     distributed sums are order-independent and an ITERATIVE algorithm
     becomes fully value-hash-oracle-able (the DuckDB side unrolls the
-    same 12 iterations as chained CTEs; contrast kmeans_fit, which is
-    float-iterative and pytest-pinned instead). Plan: edges,
+    same 12 iterations as chained CTEs). Plan: edges,
     out-weights, and the dangling-node set build once and persist;
     each iteration is one edge⋈rank broadcast-join + dst-keyed
     aggregate, plus the dangling sum as a broadcast 1-ROW aggregate
@@ -9624,7 +9621,7 @@ def x_embedding_pca_audit(spark, sf_dir):
     dim 64 → 8 before ANN is the standard recall/cost lever): mean and
     covariance are map-side-combinable aggregates over d / d² keys
     (similarity.pca_components — never a row-pair join; driver pulls
-    only the d×d model, the kmeans_fit precedent), eigendecomposition
+    only the d×d model, a k-sized model pull), eigendecomposition
     runs on the driver, and projection is JVM-side zip_with/aggregate
     dot products. The audited invariants are mathematical identities a
     broken implementation cannot fake: Σ eigenvalues equals the
@@ -12053,16 +12050,14 @@ FROM a WHERE rn = 1 GROUP BY cid ORDER BY cid
 """,
 )
 def x_kmeans_assign_audit(spark, sf_dir):
-    """One exact Lloyd assignment step, oracle-gated — the k-means
-    family's driver-visible correctness row (the iterative trainer in
-    operators/similarity.py is pytest-verified against numpy; this pins
-    the distance/argmin kernel both share). Distance is the expanded
+    """One exact Lloyd assignment step, oracle-gated: this pins the
+    k-means distance/argmin kernel. Distance is the expanded
     form |x|² − 2x·c + |c|² with every inner product a sequential
     left fold (V.dot ↔ list_inner_product — bit-identical, the
     x_ann_* precedent), so argmin ties are decided on identical
     doubles, with centroid id as the final tiebreak; per-cluster inertia
     is summed in exact integer micro-units. The k=4 seed centroids are
-    the first four fixture vectors (deterministic, the trainer's own
+    the first four fixture vectors (deterministic, the lowest-id
     seeding rule). Scale shape: the k seed rows are pulled once at
     build time and ride the scan as an exploded literal array — one
     narrow pass, zero join nodes, no shuffle until the k-key

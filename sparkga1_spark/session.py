@@ -22,9 +22,6 @@ from pyspark.sql import SparkSession
 # SQL confs that are safe (and required) to set on an externally-created
 # session too — e.g. the driver harness passes us its own SparkSession.
 RUNTIME_CONFS: dict[str, str] = {
-    # testdata events.parquet stores TIMESTAMP(NANOS); Spark reads it as
-    # long nanos with this legacy conf (catalog converts to timestamp).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # deterministic oracle comparison vs DuckDB (naive-UTC timestamps)
     "spark.sql.session.timeZone": "UTC",
     # runtime re-planning: partition coalescing + skew-join splitting
@@ -62,17 +59,20 @@ def _default_driver_memory() -> str:
 def get_spark(app_name: str = "sparkga1_spark") -> SparkSession:
     """Build (or reuse) the engine session.
 
-    local[$SPARK_GRAFT_CPUS] (local[*] with 32 shuffle partitions when
-    it is unset); shuffle partitions sized to the core count (the reference's analogous knob is numRegions≈300 at
+    local[$SPARK_GRAFT_CPUS], or one core per CPU this process may run
+    on when it is unset; shuffle partitions sized to the same core
+    count (the reference's analogous knob is numRegions≈300 at
     cluster scale, README.md:94-95 — on a 1000-executor cluster this
-    becomes a spark-submit conf, not code).
+    becomes a spark-submit conf, not code). Session confs are applied
+    here once; `apply_runtime_confs` is for sessions created elsewhere.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
-    master = f"local[{cpus}]" if cpus else "local[*]"
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus or 32))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
@@ -99,10 +99,9 @@ def get_spark(app_name: str = "sparkga1_spark") -> SparkSession:
         .config("spark.ui.retainedStages", "100")
         .config("spark.ui.retainedTasks", "2000")
         .config("spark.sql.ui.retainedExecutions", "50")
-        .config("spark.worker.ui.retainedExecutors", "50")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return apply_runtime_confs(spark)
+    return spark

@@ -17,8 +17,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from sparkga1_spark.session import apply_runtime_confs
-
 TABLES = (
     "region",
     "nation",
@@ -40,25 +38,15 @@ def table_names() -> tuple[str, ...]:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing physical quirks.
 
-    events.ts is stored TIMESTAMP(NANOS). Depending on the Spark
-    version/confs it surfaces as either (a) long nanos (legacy
-    nanosAsLong conf — normalized to a micros timestamp plus the raw
-    `ts_ns`) or (b) timestamp_ntz (Spark 4.x default — cast to a
-    session-zone timestamp, identical instant under the pinned UTC
-    session). Both branches leave `ts` a plain TIMESTAMP, the same
-    type stream_events yields, so batch and stream plans share
-    operators (joins/unions across the two paths type-check)."""
-    apply_runtime_confs(spark)
+    events.ts is stored TIMESTAMP(MICROS) without UTC adjustment, so
+    Spark reads it as timestamp_ntz; it is cast to a session-zone
+    timestamp (identical instant under the pinned UTC session). That
+    leaves `ts` a plain TIMESTAMP, the same type stream_events yields,
+    so batch and stream plans share operators (joins/unions across the
+    two paths type-check)."""
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        dt = dict(df.dtypes).get("ts")
-        if dt == "bigint":
-            df = (
-                df.withColumnRenamed("ts", "ts_ns")
-                .withColumn("ts", F.expr("timestamp_micros(ts_ns div 1000)"))
-            )
-        elif dt == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    if name == "events" and dict(df.dtypes).get("ts") == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -98,5 +86,4 @@ def read_evolving_parquet(spark: SparkSession, path: str) -> DataFrame:
     unlike a blind `spark.read.parquet` it cannot silently drop the new
     columns of late files (the default reader takes ONE file's footer as
     the schema of all)."""
-    apply_runtime_confs(spark)
     return spark.read.option("mergeSchema", "true").parquet(path)

@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from sparkga1_spark.session import apply_runtime_confs
-
 
 def stream_events(
     spark: SparkSession,
@@ -24,23 +22,18 @@ def stream_events(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream over a parquet directory. The testdata events
-    table stores TIMESTAMP(NANOS) → long ts; normalize to a real
-    timestamp column exactly like the batch catalog so batch and stream
-    plans share operators."""
-    apply_runtime_confs(spark)
+    table stores TIMESTAMP(MICROS) → timestamp_ntz ts; normalize to a
+    real timestamp column exactly like the batch catalog so batch and
+    stream plans share operators."""
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     df = reader.load(path)
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumnRenamed("ts", "ts_ns").withColumn(
-            "ts", F.expr("timestamp_micros(ts_ns div 1000)")
-        )
-    elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-        # Spark 4.1 reads parquet TIMESTAMP(NANOS) as TIMESTAMP_NTZ (the
-        # legacy long-nanos conf no longer applies). Watermarks require
-        # TIMESTAMP_LTZ; the session zone is pinned UTC, so this cast is
-        # value-preserving and keeps batch/stream plans aligned.
+    if dict(df.dtypes).get("ts") == "timestamp_ntz":
+        # parquet TIMESTAMP(MICROS) without UTC adjustment reads as
+        # TIMESTAMP_NTZ. Watermarks require TIMESTAMP_LTZ; the session
+        # zone is pinned UTC, so this cast is value-preserving and keeps
+        # batch/stream plans aligned.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 

@@ -64,14 +64,6 @@ def test_ivf_planted_recall_floor_and_nprobe_dial(planted):
     assert r2 >= r1
 
 
-def test_ivf_trained_planted_recall(planted):
-    cents = S.kmeans_fit(
-        planted.filter(F.col("vec_id") < 1000000), dim=DIM, k=10, iters=3
-    )
-    r = _top1(S.ivf_topk_trained(planted, cents, dim=DIM, query_pred=_qpred(), k=3))
-    assert r >= 0.95
-
-
 def test_lsh_planted_bucket_recall(planted):
     """Sign-LSH: a planted twin must land in its original's bucket for
     ≥80% of pairs at the default 4 planes (measured 0.85; fewer planes
@@ -120,8 +112,7 @@ def test_pq_adc_planted_twin_near_min_distance(spark):
     is PROXIMITY, not equality: every twin's ADC distance is within 5%
     of the per-query minimum (measured max gap 1.1% at sf0.01 / 2.6%
     at sf0.001), every twin ranks in the top 15, and recall@3 ≥ 0.6
-    (0.75 observed; untrained seeded codebook —
-    kmeans_fit-per-subspace is the trained upgrade path). A wrong
+    (0.75 observed; untrained seeded codebook). A wrong
     encode argmin, LUT cell, or candidate sum blows these bounds."""
     from pyspark.sql import functions as F
 
@@ -154,45 +145,6 @@ def test_pq_adc_planted_twin_near_min_distance(spark):
         if twin_rows[0].rank <= 3:
             hits3 += 1
     assert hits3 / len(by_q) >= 0.6, f"recall@3 regressed: {hits3}/20"
-
-
-def test_pq_trained_codebook_recall_floors(planted):
-    """Trained-codebook PQ (train_pq_codebooks → pq_adc_topk_trained):
-    with 16 codes/subspace the quantizer recovers EVERY planted twin
-    at rank 1 (measured 1.0 at sf0.01; floor 0.95), and at the seeded
-    variant's own 4-code budget the trained codebook DOMINATES the
-    seeded one on planted top-1 (0.45 vs 0.35 measured) — training
-    pays for itself at equal cost. Raw recall@3 on the structureless
-    uniform table: 0.383 measured with 16 codes (floor 0.30; low by
-    nature, see module docstring)."""
-    base = planted.filter(F.col("vec_id") < 1000000)
-    b16 = S.train_pq_codebooks(base, n_codes=16, iters=3)
-    t16 = S.pq_adc_topk_trained(planted, b16, query_pred=_qpred(), k=3)
-    rows16 = t16.collect()
-    got = {r.query_id: r.cand_id for r in rows16 if r.rank == 1}
-    top1_16 = sum(1 for q, w in PAIRS.items() if got.get(q) == w) / len(PAIRS)
-    assert top1_16 >= 0.95, top1_16
-
-    b4 = S.train_pq_codebooks(base, n_codes=4, iters=3)
-    t4 = S.pq_adc_topk_trained(planted, b4, query_pred=_qpred(), k=3)
-    seeded = S.pq_adc_topk(
-        planted, query_pred=_qpred(), codebook_pred=F.col("vec_id") < 4, k=3
-    )
-    assert _top1(t4) >= _top1(seeded), (_top1(t4), _top1(seeded))
-
-    truth: dict[int, set] = {}
-    for r in S.brute_force_topk(
-        planted.filter(_qpred()), planted, k=3, dim=DIM
-    ).collect():
-        truth.setdefault(r.query_id, set()).add(r.cand_id)
-    total = sum(len(v) for v in truth.values())
-    got3: dict[int, set] = {}
-    for r in rows16:
-        got3.setdefault(r.query_id, set()).add(r.cand_id)
-    recall3 = (
-        sum(len(truth[k] & got3.get(k, set())) for k in truth) / total
-    )
-    assert recall3 >= 0.30, recall3
 
 
 def test_pca_matches_numpy_and_finds_planted_axes(spark):
@@ -360,9 +312,7 @@ def test_ivfpq_planted_twin_recall_floors(planted):
     a coarse quantizer because pruning the candidate pool removes
     quantization-noise competitors that flat ADC lets outrank the
     twin, and recall is NON-monotone in nprobe (more probes re-admit
-    competitors faster than they add missed twins). The trained
-    composition below is the production fix for the quantizer
-    coarseness."""
+    competitors faster than they add missed twins)."""
     cent = (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 1000000)
 
     def ivfpq(npb):
@@ -384,121 +334,3 @@ def test_ivfpq_planted_twin_recall_floors(planted):
     assert r1 >= flat, (r1, flat)
     assert r1 >= 0.6, r1
     assert r2 >= 0.4, r2
-
-
-def test_ivfpq_trained_recall_floors(planted):
-    """The full production IVFADC shape — trained 16-code codebooks
-    routed through IVF probes (ivfpq_topk_trained): measured planted
-    top-1 = 0.95 at nprobe=1 and 1.00 at nprobe=2 at BOTH sf0.001 and
-    sf0.01 — equal to IVF-flat's exact rescoring (0.95/1.00) and
-    above flat trained-PQ's 0.975, while the ADC scan only ever
-    touches probed-cluster candidates. Floors: 0.90 / 0.95."""
-    cent = (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 1000000)
-    books = S.train_pq_codebooks(
-        planted.filter(F.col("vec_id") < 1000000), n_codes=16, iters=3
-    )
-
-    def run(npb):
-        return _top1(
-            S.ivfpq_topk_trained(
-                planted, books, dim=DIM, centroid_pred=cent,
-                query_pred=_qpred(), k=3, nprobe=npb,
-            )
-        )
-
-    assert run(1) >= 0.90
-    assert run(2) >= 0.95
-
-
-def test_pq_encode_vectorized_matches_expression(spark, sf_dir):
-    """The Arrow/numpy PQ encode must be BIT-IDENTICAL to the
-    literal-expression argmin (same per-dimension left-fold, same
-    hround + micro-unit snap, same first-minimum tiebreak) — the r8
-    IVF-assignment discipline applied to the trained-ADC encode, whose
-    4x16x16 interpreted expressions per row dominated the 100x cost."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = S.train_pq_codebooks(emb, n_codes=16, iters=2)
-    qp = F.col("vec_id") % 20 == 0
-    a = S.pq_adc_topk_trained(emb, books, query_pred=qp, k=3, vectorized=False)
-    b = S.pq_adc_topk_trained(emb, books, query_pred=qp, k=3, vectorized=True)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    cent = F.col("vec_id") % 50 == 0
-    c = S.ivfpq_topk_trained(emb, books, dim=DIM, centroid_pred=cent,
-                             query_pred=qp, k=3, nprobe=2, vectorized=False)
-    d = S.ivfpq_topk_trained(emb, books, dim=DIM, centroid_pred=cent,
-                             query_pred=qp, k=3, nprobe=2, vectorized=True)
-    assert sorted(map(tuple, c.collect())) == sorted(map(tuple, d.collect()))
-
-
-def test_ivfpq_residual_beats_raw_on_clustered_data(spark):
-    """residual=True is the paper's actual IVFADC — codes quantize
-    v − centroid(v), trained on ivf_residuals output. On CLUSTERED
-    data (8 well-separated centers, 60 members each at σ=0.03, twins
-    planted at σ=0.005) a 4-code RAW quantizer is measured at 0.000
-    planted top-1: every cluster member lands on the same code per
-    subspace, all ADC distances tie, and the id tiebreak never picks
-    the twin — the coarse geometry eats the whole code budget. The
-    RESIDUAL quantizer spends the same 4 codes on within-cluster
-    structure: measured 0.583 at both nprobe settings. Floors pin the
-    separation (residual ≥ 0.5, raw ≤ 0.1) and the vectorized encode's
-    bit-identity on the residual path."""
-    import numpy as np
-
-    rng = np.random.RandomState(42)
-    K, PER = 8, 60
-    centers = rng.uniform(0, 1, (K, DIM))
-    rows = []
-    for k in range(K):
-        rows.append((1000 * k, centers[k].tolist()))  # exact center row
-        for i in range(1, PER + 1):
-            v = centers[k] + 0.03 * rng.standard_normal(DIM)
-            rows.append((1000 * k + i, v.tolist()))
-    base = dict(rows)
-    twins = []
-    for k in range(K):
-        for i in range(10, PER + 1, 10):
-            bid = 1000 * k + i
-            twins.append((
-                1_000_000 + bid,
-                (np.array(base[bid]) + 0.005 * rng.standard_normal(DIM)).tolist(),
-            ))
-    emb = spark.createDataFrame(
-        rows + twins, "vec_id long, embedding array<double>"
-    ).persist()
-    pairs = {q: q - 1_000_000 for q, _ in twins}
-    qpred = F.col("vec_id") >= 1_000_000
-    cent = (F.col("vec_id") % 1000 == 0) & (F.col("vec_id") < 1_000_000)
-
-    def top1(df):
-        got = {r.query_id: r.cand_id for r in df.collect() if r.rank == 1}
-        return sum(1 for q, w in pairs.items() if got.get(q) == w) / len(pairs)
-
-    data = emb.filter(F.col("vec_id") < 1_000_000)
-    books_raw = S.train_pq_codebooks(data, n_codes=4, iters=3)
-    books_res = S.train_pq_codebooks(
-        S.ivf_residuals(data, dim=DIM, centroid_pred=cent),
-        vec_col="_res", n_codes=4, iters=3,
-    )
-    raw = top1(S.ivfpq_topk_trained(
-        emb, books_raw, dim=DIM, centroid_pred=cent, query_pred=qpred,
-        k=3, nprobe=2,
-    ))
-    res = top1(S.ivfpq_topk_trained(
-        emb, books_res, dim=DIM, centroid_pred=cent, query_pred=qpred,
-        k=3, nprobe=2, residual=True,
-    ))
-    assert raw <= 0.1, raw
-    assert res >= 0.5, res
-    assert res > raw
-
-    # residual-path bit-identity: vectorized encode == expression encode
-    a = S.ivfpq_topk_trained(
-        emb, books_res, dim=DIM, centroid_pred=cent, query_pred=qpred,
-        k=3, nprobe=2, residual=True, vectorized=False,
-    )
-    b = S.ivfpq_topk_trained(
-        emb, books_res, dim=DIM, centroid_pred=cent, query_pred=qpred,
-        k=3, nprobe=2, residual=True, vectorized=True,
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    emb.unpersist()

@@ -3463,159 +3463,6 @@ def test_vp8l_plane_coded_encoder_matches_reference():
     assert seen_plane_code, "no plane code was ever decoded"
 
 
-# --------------------------------------------------------------------------
-# Animated WebP (VP8X + ANIM/ANMF)
-# --------------------------------------------------------------------------
-
-
-def _ref_anim_composite(frames, cw, ch, bg):
-    """Independent compositor, straight from the container spec's
-    formulas (canvas starts transparent; B=0 alpha-blends over the
-    uint8 canvas state; D=1 fills the rect with the background color
-    after the snapshot)."""
-    import numpy as np
-
-    out = np.zeros((ch, cw, 4), np.uint8)
-    snaps = []
-    for (x, y, px, _dur, blend, dispose) in frames:
-        px = np.asarray(px, np.uint8)
-        if px.shape[2] == 3:
-            px = np.dstack([px, np.full(px.shape[:2], 255, np.uint8)])
-        fh, fw = px.shape[:2]
-        reg = out[y : y + fh, x : x + fw].astype(np.float64)
-        src = px.astype(np.float64)
-        if not blend:
-            res = src
-        else:
-            a_s = src[:, :, 3:4] / 255.0
-            a_d = reg[:, :, 3:4] / 255.0
-            a_o = a_s + a_d * (1 - a_s)
-            rgb = (
-                src[:, :, :3] * a_s + reg[:, :, :3] * a_d * (1 - a_s)
-            ) / np.where(a_o == 0, 1, a_o)
-            res = np.dstack([np.where(a_o == 0, 0.0, rgb), a_o * 255.0])
-        out[y : y + fh, x : x + fw] = np.clip(np.round(res), 0, 255).astype(
-            np.uint8
-        )
-        snaps.append(out.copy())
-        if dispose:
-            out[y : y + fh, x : x + fw] = np.array(bg, np.uint8)
-    return snaps
-
-
-def test_webp_animation_compositing_matrix():
-    """Animated WebP: lossless VP8L-with-alpha frames make every
-    composite EXACT — the engine's decode must equal the independent
-    spec compositor across blend/no-blend × dispose/keep × offsets ×
-    alpha/opaque frames × frame counts, and the meta fields (loop,
-    background, durations) roundtrip."""
-    import numpy as np
-
-    from sparkga1_spark.operators.multimodal import (
-        build_webp_anim,
-        parse_webp_animation,
-    )
-
-    rng = np.random.RandomState(9)
-    for trial in range(6):
-        cw, ch = int(rng.randint(8, 40)) * 2, int(rng.randint(8, 30)) * 2
-        n = int(rng.randint(1, 6))
-        frames = []
-        for _ in range(n):
-            fw = int(rng.randint(1, cw // 2)) * 2
-            fh = int(rng.randint(1, ch // 2)) * 2
-            x = int(rng.randint(0, (cw - fw) // 2 + 1)) * 2
-            y = int(rng.randint(0, (ch - fh) // 2 + 1)) * 2
-            chans = 4 if rng.randint(2) else 3
-            px = rng.randint(0, 256, (fh, fw, chans), dtype=np.uint8)
-            frames.append(
-                (x, y, px, int(rng.randint(1, 1000)),
-                 bool(rng.randint(2)), bool(rng.randint(2)))
-            )
-        bg = tuple(int(v) for v in rng.randint(0, 256, 4))
-        loop = int(rng.randint(0, 10))
-        data = build_webp_anim(frames, cw, ch, bg=bg, loop=loop)
-        gw, gh, gloop, gbg, snaps = parse_webp_animation(data)
-        assert (gw, gh, gloop, gbg) == (cw, ch, loop, bg), trial
-        assert [d for d, _ in snaps] == [f[3] for f in frames]
-        want = _ref_anim_composite(frames, cw, ch, bg)
-        for i, ((_d, got), exp) in enumerate(zip(snaps, want)):
-            assert np.array_equal(got, exp), (trial, i)
-
-
-def test_webp_animation_refusals_and_truncation():
-    """Animation guards: stills refuse the animation parser (and the
-    parser refuses stills), ANMF before ANIM refuses, frames escaping
-    the canvas refuse, and every byte prefix raises ValueError only
-    (the exhaustive-truncation discipline)."""
-    import numpy as np
-    import pytest
-
-    from sparkga1_spark.operators.multimodal import (
-        build_webp_anim,
-        build_webp_lossless,
-        parse_webp_animation,
-        parse_webp_pixels,
-    )
-
-    rng = np.random.RandomState(11)
-    px = rng.randint(0, 256, (6, 8, 4), dtype=np.uint8)
-    still = build_webp_lossless(px)
-    with pytest.raises(ValueError, match="VP8X\\+ANIM"):
-        parse_webp_animation(still)
-    anim = build_webp_anim(
-        [(0, 0, px, 50, True, False), (2, 2, px[:4, :4], 30, False, True)],
-        12, 8, bg=(1, 2, 3, 4), loop=2,
-    )
-    # the still-pixels parser walks past ANMF chunks and refuses
-    with pytest.raises(ValueError, match="no VP8L/VP8 image chunk"):
-        parse_webp_pixels(anim)
-    with pytest.raises(ValueError, match="frame offsets must be even"):
-        build_webp_anim([(1, 0, px, 50, True, False)], 12, 8)
-    # a frame rectangle escaping the canvas refuses at decode
-    big = build_webp_anim([(6, 4, px, 50, True, False)], 12, 8)
-    with pytest.raises(ValueError, match="escapes the canvas"):
-        parse_webp_animation(big)
-    n_ok = 0
-    for i in range(len(anim)):
-        try:
-            parse_webp_animation(anim[:i])
-            n_ok += 1
-        except ValueError:
-            pass
-    assert n_ok <= 2, f"{n_ok} truncated prefixes decoded"
-
-
-def test_webp_animation_lossy_frames():
-    """ANMF frames can wrap the LOSSY still shape (ALPH + VP8 chunks)
-    too: a uniform-130 RGB lossy frame with an exact alpha plane is
-    exactly reconstructible (the all-skip VP8 path), so the composite
-    stays hand-computable alongside lossless frames."""
-    import numpy as np
-
-    from sparkga1_spark.operators.multimodal import (
-        build_webp_anim,
-        parse_webp_animation,
-    )
-
-    rng = np.random.RandomState(2)
-    al = rng.randint(0, 256, (8, 10), dtype=np.uint8)
-    lossy = np.dstack([np.full((8, 10, 3), 130, np.uint8), al])
-    crisp = rng.randint(0, 256, (4, 6, 4), dtype=np.uint8)
-    data = build_webp_anim(
-        [(0, 0, lossy, 20, False, False, True),
-         (2, 2, crisp, 30, True, False)],
-        10, 8,
-    )
-    _, _, _, _, snaps = parse_webp_animation(data)
-    assert np.array_equal(snaps[0][1], lossy)
-    want = _ref_anim_composite(
-        [(0, 0, lossy, 20, False, False), (2, 2, crisp, 30, True, False)],
-        10, 8, (255, 255, 255, 255),
-    )
-    assert np.array_equal(snaps[1][1], want[1])
-
-
 def test_mp4_mdat_before_moov_layout():
     """The COMMON live-recording layout puts mdat BEFORE moov (the
     muxer can't know the sample tables until recording ends). The box

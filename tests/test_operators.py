@@ -115,12 +115,14 @@ def test_range_split_spreads_hot_region_over_tasks(spark):
     assert sorted(map(tuple, split.collect())) == sorted(map(tuple, whole.collect()))
 
 
-def test_driver_heap_default_fits_host(spark):
+def test_driver_heap_default_fits_host(spark, monkeypatch):
     """Without SPARK_GRAFT_DRIVER_MEM the driver heap is half the host's
-    memory at most (1g-16g), not a fixed size larger than the host."""
+    memory at most (1g-16g), not a fixed size larger than the host;
+    without SPARK_GRAFT_CPUS the shuffle partitions are one per CPU this
+    process may run on, not a fixed count."""
     import os
 
-    from sparkga1_spark.session import _default_driver_memory
+    from sparkga1_spark.session import _default_driver_memory, get_spark
 
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     gib = int(_default_driver_memory().removesuffix("g"))
@@ -128,6 +130,16 @@ def test_driver_heap_default_fits_host(spark):
     assert gib == 1 or gib * 2**30 <= ram / 2
     want = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
     assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    try:
+        get_spark()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+            len(os.sched_getaffinity(0))
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_coalesce_intervals_zero_slack_and_containment(spark, sf_dir):
@@ -1030,41 +1042,6 @@ def test_scalar_subq_zero_build_jobs_reused_once(spark, sf_dir):
     plan = probe_l._jdf.queryExecution().executedPlan().toString()
     assert "ReusedSubquery" in plan, plan[:1200]
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_webp_animation_frame_stage(spark):
-    """decode_animation_frames: the REAL 1→N frame-sampling flatMap —
-    plant per-doc animated WebPs (lossless VP8L-with-alpha frames, so
-    composites are exact), run the Arrow stage, and check frame
-    counts, durations, dims, and a hand-computed px_sum."""
-    import numpy as np
-
-    from sparkga1_spark.operators import multimodal
-
-    rows = []
-    expected = {}
-    for doc_id in range(6):
-        n = doc_id % 3 + 1
-        rng = np.random.RandomState(doc_id)
-        frames = [
-            (0, 0, rng.randint(0, 256, (8, 10, 4), dtype=np.uint8),
-             10 * (i + 1), True, False)
-            for i in range(n)
-        ]
-        blob = multimodal.build_webp_anim(frames, 10, 8, loop=doc_id)
-        rows.append((doc_id, bytearray(blob)))
-        _, _, _, _, snaps = multimodal.parse_webp_animation(blob)
-        expected[doc_id] = [
-            (i, d, int(np.asarray(c, np.int64).sum()))
-            for i, (d, c) in enumerate(snaps)
-        ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = multimodal.decode_animation_frames(df).collect()
-    assert len(got) == sum(len(v) for v in expected.values())
-    for r in got:
-        i, dur, px = expected[r.doc_id][r.frame_idx]
-        assert (r.frame_idx, r.duration_ms, r.px_sum) == (i, dur, px)
-        assert (r.width, r.height) == (10, 8)
 
 
 def test_spread_if_narrow_fires_only_on_narrow_scans(spark, sf_dir):

@@ -321,7 +321,9 @@ def test_aqe_splits_skewed_join_partitions(spark, sf_dir):
         assert "skew=true" in plan, plan[:1500]
     finally:
         for k, v in old.items():
-            if v is not None:
+            if v is None:
+                spark.conf.unset(k)
+            else:
                 spark.conf.set(k, v)
 
 

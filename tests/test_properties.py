@@ -581,7 +581,6 @@ def test_group_ols_matches_numpy_polyfit(spark, sf_dir):
         r.n_name: r
         for r in all_queries()["x_group_ols_trend"](spark, sf_dir).collect()
     }
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     rows = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .join(

@@ -214,75 +214,6 @@ def test_bpe_rejects_delimiter_bearing_words(spark):
         bpe_train_merges(spark, wf, rounds=1).collect()
 
 
-def test_bpe_batched_agrees_with_sequential(spark):
-    """r6 VERDICT #5: the batched trainer. m=1 must EQUAL the
-    sequential trainer merge-for-merge on the classic fixture; with
-    symbol-disjoint dominant pairs, batched(m=3, 1 round) must learn
-    the same merge set (same wcounts) sequential learns in 3 rounds;
-    overlapping candidates are skipped within a round, not misapplied."""
-    from sparkga1_spark.operators.tokenizer import (
-        bpe_train_merges,
-        bpe_train_merges_batched,
-    )
-
-    vocab = [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3), ("a", 1)]
-    wf = spark.createDataFrame(vocab, "w string, f long")
-    seq = [
-        (r.rnd, r.pair, r.merged, r.wcount)
-        for r in bpe_train_merges(spark, wf, rounds=6).collect()
-    ]
-    b1 = [
-        (r.rnd, r.pair, r.merged, r.wcount)
-        for r in bpe_train_merges_batched(spark, wf, rounds=6, m=1).collect()
-    ]
-    assert b1 == seq and all(r.k == 1 for r in
-                             bpe_train_merges_batched(spark, wf, rounds=2,
-                                                      m=1).collect())
-
-    dis = [("ab", 100), ("cd", 90), ("ef", 80), ("gh", 5)]
-    wfd = spark.createDataFrame(dis, "w string, f long")
-    seq3 = {(r.pair, r.merged, r.wcount)
-            for r in bpe_train_merges(spark, wfd, rounds=3).collect()}
-    bat = bpe_train_merges_batched(spark, wfd, rounds=1, m=3).collect()
-    assert {(r.pair, r.merged, r.wcount) for r in bat} == seq3
-    assert [(r.rnd, r.k) for r in sorted(bat, key=lambda r: r.k)] == [
-        (1, 1), (1, 2), (1, 3)
-    ]
-
-    ov = spark.createDataFrame([("abc", 10)], "w string, f long")
-    got = bpe_train_merges_batched(spark, ov, rounds=2, m=2).collect()
-    assert [(r.rnd, r.k, r.pair, r.merged, r.wcount) for r in got] == [
-        (1, 1, "a b", "ab", 10),
-        (2, 1, "ab c", "abc", 10),
-    ]
-
-
-def test_bpe_batch_admission_tracks_merged_outputs():
-    """r7 ADVICE: within-round disjointness must cover each kept pair's
-    MERGED OUTPUT symbol, not just its inputs — otherwise ('ab','x')
-    and ('a','b') could be admitted together, and applying ('a','b')
-    first creates new 'ab' symbols the later merge also consumes
-    (order-dependent result, stale wcount). Unit-level because the
-    char-init public API applies merges globally, which makes the
-    collision unreachable end-to-end — the admission filter still must
-    hold the invariant on its own."""
-    from sparkga1_spark.operators.tokenizer import _admit_disjoint_batch
-
-    # kept ('ab','x') must block a later ('a','b') whose OUTPUT 'ab'
-    # is one of the kept pair's inputs (input-vs-output collision)
-    assert _admit_disjoint_batch([("ab x", 9), ("a b", 8)], m=4) == [
-        ("ab x", 9)
-    ]
-    # two splits of the same output symbol must not both be admitted
-    assert _admit_disjoint_batch([("ab c", 9), ("a bc", 8)], m=4) == [
-        ("ab c", 9)
-    ]
-    # genuinely disjoint pairs still batch, and m still caps
-    assert _admit_disjoint_batch(
-        [("a b", 9), ("c d", 8), ("e f", 7)], m=2
-    ) == [("a b", 9), ("c d", 8)]
-
-
 def test_bpe_encoder_matches_pure_python(spark):
     """bpe_segment_vocab must tokenize every vocabulary word exactly as
     the pure-Python reference does after the same merges — including a

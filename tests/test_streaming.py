@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 @pytest.fixture(scope="module")
 def event_stream_schema(spark, sf_dir):
-    # raw physical schema (ts is long nanos under the legacy conf)
+    # raw physical schema (ts is timestamp_ntz: TIMESTAMP(MICROS) on disk)
     from sparkga1_spark.session import apply_runtime_confs
 
     apply_runtime_confs(spark)
