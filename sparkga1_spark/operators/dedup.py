@@ -538,19 +538,11 @@ def prefix_filter_jaccard_pairs(
     # table both costs a corpus-wide driver collect and measured ~2x
     # slower than shuffled-hash at the 10x replica, and can never
     # broadcast at 100 TB. Self-join ⇒ either build side is equivalent.
-    import os as _os
-
-    _force = _os.environ.get(
-        "SPARKGA1_SETSIM_SELF", _os.environ.get("SPARKGA1_SETSIM_SHJ")
-    )
-    if _force is not None and _force != "":
-        _shj_self = _force == "1"
-    else:
-        # sized from the element ROWS, not ranked: ranked is a join, so
-        # its plan-stat estimate is join-product-inflated (always
-        # huge); rows' estimate is linear in the input and ranked —
-        # the per-set prefixes — is a subset of rows
-        _shj_self = _est_bytes(rows) > _SHJ_EST_BYTES
+    # Sized from the element ROWS, not ranked: ranked is a join, so its
+    # plan-stat estimate is join-product-inflated (always huge); rows'
+    # estimate is linear in the input and ranked — the per-set
+    # prefixes — is a subset of rows.
+    _shj_self = _est_bytes(rows) > _SHJ_EST_BYTES
     _ra = ranked.select(
         F.col(id_col).alias("id_a"),
         hash_col,
@@ -662,16 +654,9 @@ def _verify_candidate_pairs(
     to the measured crossover: estimates are 0.16 MiB at sf0.1 and
     1.76 MiB at 10x, so above `_SHJ_EST_BYTES` (1 MiB) the candidate
     side carries a shuffle_hash hint and the corpus side streams.
-    Result-invariant either way (strategy only); env override
-    SPARKGA1_SETSIM_SHJ=0/1 forces an arm for A/B measurement."""
-    import os as _os
-
+    Result-invariant either way (strategy only)."""
     num, den = int(threshold_num), int(threshold_den)
-    _force = _os.environ.get("SPARKGA1_SETSIM_SHJ")
-    if _force is not None and _force != "":
-        _shj = _force == "1"
-    else:
-        _shj = _est_bytes(rows) > _SHJ_EST_BYTES
+    _shj = _est_bytes(rows) > _SHJ_EST_BYTES
 
     def _cand_side(df: DataFrame) -> DataFrame:
         return df.hint("shuffle_hash") if _shj else df
@@ -716,7 +701,6 @@ def set_similarity_pairs(
     hash_col: str = "h",
     threshold_num: int,
     threshold_den: int,
-    route: str | None = None,
 ) -> DataFrame:
     """Routed set-similarity join (r5 VERDICT #3): pick the execution
     strategy by threshold.
@@ -734,7 +718,7 @@ def set_similarity_pairs(
       s=0.6 pair: 0.17), the right trade BELOW the high-tau regime
       where the prefix join's candidate volume explodes.
 
-    `route=None` applies the measured decision rule: prefix for
+    The route follows the measured decision rule: prefix for
     tau >= 1/2, LSH+refine below (PLANS.md round-6 envelope notes:
     the 10x/100x smoke cost of the prefix route is df-distribution-
     dependent and rises steeply as tau drops, while LSH+refine holds
@@ -748,11 +732,7 @@ def set_similarity_pairs(
             f"set similarity threshold must satisfy 0 < num <= den; got "
             f"{threshold_num}/{threshold_den}"
         )
-    if route is None:
-        route = (
-            "prefix" if 2 * threshold_num >= threshold_den else "lsh_refine"
-        )
-    if route == "prefix":
+    if 2 * threshold_num >= threshold_den:
         return prefix_filter_jaccard_pairs(
             rows,
             id_col=id_col,
@@ -760,8 +740,6 @@ def set_similarity_pairs(
             threshold_num=threshold_num,
             threshold_den=threshold_den,
         )
-    if route != "lsh_refine":
-        raise ValueError(f"unknown set-similarity route: {route}")
     rows = tracked_persist(rows)
     # persisted for the same reason as the prefix route: verification
     # probes it twice (sz_a, sz_b) and each probe otherwise rebuilds

@@ -213,76 +213,11 @@ def _ivf_assign_vectorized(
     return base.mapInPandas(run, schema=schema)
 
 
-_CENTROID_MEMO: dict[tuple, list] = {}
-_CENTROID_MEMO_MAX = 32
-
-
-def _file_identities(files: tuple) -> tuple:
-    """file URI list → ((uri, size, mtime_ns), ...): content identity
-    for local files so an in-place rewrite under the same names misses
-    the memo. Non-file schemes (and stat failures) contribute
-    (uri, None, None) — path-only, as before."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    out = []
-    for uri in files:
-        size = mtime = None
-        p = urlparse(uri)
-        if p.scheme in ("", "file"):
-            try:
-                st = os.stat(unquote(p.path))
-                size, mtime = st.st_size, st.st_mtime_ns
-            except OSError:
-                pass
-        out.append((uri, size, mtime))
-    return tuple(out)
-
-
 def _collect_centroids(
     df: DataFrame, *, id_col: str, vec_col: str, dim: int, centroid_pred
 ) -> list:
     """The k-sized centroid model pull (the sanctioned build-time
-    collect), cid-ascending.
-
-    Session-memoized (r9 VERDICT #2): the pull depends only on the
-    resolved input files and the selection arguments, but it re-ran on
-    every query build — a fixed ~2s job per bench iteration at sf0.1
-    with zero information gain. The memo key is (resolved input file
-    list WITH per-file (size, mtime) for local files — r10 ADVICE: a
-    dataset rewritten in place under identical filenames must miss;
-    non-local URIs contribute path-only and rely on object-store
-    immutability), id/vec column, dim, and the unresolved predicate
-    expression string; frames not backed by files (inputFiles() empty —
-    in-memory fixtures) skip the memo, so a rebuilt fixture can never
-    read stale centroids. The cached value is the k-sized model (a few
-    KB), kept for the session on purpose — `release_tracked()` frees
-    executor caches between queries and must NOT drop a driver-side
-    model. The memo is bounded (oldest-inserted evicted past
-    _CENTROID_MEMO_MAX) so a long session cannot grow it without
-    limit."""
-    key = None
-    try:
-        files = tuple(sorted(df.inputFiles()))
-        # semanticHash canonicalizes exprIds, so a REBUILT identical
-        # plan hits while a derived (filtered/projected) frame over the
-        # same files cannot collide with the raw scan's entry
-        plan_hash = df._jdf.semanticHash()
-    except Exception:  # non-py4j backends: no safe key — just collect
-        files = ()
-        plan_hash = None
-    if files:
-        key = (
-            _file_identities(files),
-            plan_hash,
-            id_col,
-            vec_col,
-            dim,
-            str(centroid_pred),
-        )
-        hit = _CENTROID_MEMO.get(key)
-        if hit is not None:
-            return hit
+    collect), cid-ascending."""
     rows = sorted(
         df.filter(centroid_pred)
         .select(
@@ -295,11 +230,15 @@ def _collect_centroids(
     )
     if not rows:
         raise ValueError("ivf: centroid_pred selected no rows")
-    if key is not None:
-        while len(_CENTROID_MEMO) >= _CENTROID_MEMO_MAX:
-            _CENTROID_MEMO.pop(next(iter(_CENTROID_MEMO)))
-        _CENTROID_MEMO[key] = rows
     return rows
+
+
+# Centroid count from which assignment runs the Arrow/numpy kernel
+# (_ivf_assign_vectorized) instead of the expression fold: the k-term
+# dot-product expression's codegen cost dominates early (an A/B at
+# sf0.1, 40 centroids over 2000 vectors: kernel 1.4-1.5s steady-state,
+# expression fold 4.3-4.4s).
+_IVF_NUMPY_MIN_CENTROIDS = 16
 
 
 def _ivf_scored(
@@ -310,16 +249,15 @@ def _ivf_scored(
     dim: int,
     centroid_pred,
     nprobe: int,
-    vectorized: bool | None,
 ) -> DataFrame:
     """Shared IVF coarse-quantizer pass for `ivf_topk` and
     `ivfpq_topk`: pull the k-sized centroid model once at build time
     (the sanctioned model pull) and emit a tracked-persisted frame
     (id, _vd, _vn, cluster_id, _probes[nprobe]) — map-only, no
-    Exchange between the scan and the cluster-id column. Assignment
-    auto-switches (k ≥ 64, `vectorized=None`) to the Arrow/numpy
-    kernel, which is bit-identical to the expression fold (pinned by
-    test_ivf_vectorized_matches_expression)."""
+    Exchange between the scan and the cluster-id column. With
+    k ≥ _IVF_NUMPY_MIN_CENTROIDS (16) centroids, assignment runs the
+    Arrow/numpy kernel, which is bit-identical to the expression fold
+    (pinned by test_ivf_vectorized_matches_expression)."""
     id_type = df.schema[id_col].dataType
     cent_rows = _collect_centroids(
         df, id_col=id_col, vec_col=vec_col, dim=dim,
@@ -330,14 +268,7 @@ def _ivf_scored(
         vectors.to_double(F.col(vec_col)).alias("_vd"),
         vectors.norm(F.col(vec_col), dim).alias("_vn"),
     )
-    # auto-switch threshold lowered 64→16 in r10: a same-session A/B at
-    # sf0.1 (k=40, 2000 vectors) measured the Arrow/numpy kernel at
-    # 1.4-1.5s steady-state vs 4.3-4.4s for the expression fold — the
-    # k-term dot-product expression's codegen cost dominates well below
-    # the old threshold, and the kernel is pinned bit-identical to the
-    # expression path (test_ivf_vectorized_matches_expression)
-    use_np = vectorized if vectorized is not None else len(cent_rows) >= 16
-    if use_np:
+    if len(cent_rows) >= _IVF_NUMPY_MIN_CENTROIDS:
         return tracked_persist(
             _ivf_assign_vectorized(base, cent_rows, id_col, nprobe)
         )
@@ -391,7 +322,6 @@ def ivf_topk(
     query_pred,
     k: int = 3,
     nprobe: int = 1,
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """IVF-flat ANN: vectors are assigned to their nearest seed
     centroid (cosine, deterministic tiebreak); each query probes its
@@ -424,15 +354,16 @@ def ivf_topk(
     evaluates the centroid transform through Catalyst's higher-order-
     function interpreter at ~10⁷ pair-ops/s — fine at fixture scale
     (k≈40), quadratic death at 100× where the %50 seed rule makes
-    k ∝ n (measured 72s at 10×). With `vectorized=None` (auto), k ≥ 64
-    switches assignment to an Arrow-batched numpy kernel that computes
-    THE SAME sequential left-fold dot product (per-dimension
-    accumulation in the identical IEEE order), the same
+    k ∝ n (measured 72s at 10×). From k ≥ 16 centroids
+    (_IVF_NUMPY_MIN_CENTROIDS) assignment runs an Arrow-batched numpy
+    kernel that computes THE SAME sequential left-fold dot product
+    (per-dimension accumulation in the identical IEEE order), the same
     floor(x·1e6+0.5) rounding, and the same (negcos, cid) tiebreak —
     bit-identical outputs, pinned by
     test_ivf_vectorized_matches_expression — at numpy matmul-class
-    throughput. The driver-gate fixtures (k=40 at sf0.01/0.1) stay on
-    the oracle-pinned expression path."""
+    throughput. The driver-gate fixtures (k=40 at sf0.01/0.1) therefore
+    run the numpy kernel; smaller centroid sets keep the expression
+    fold."""
     scored = _ivf_scored(
         df,
         id_col=id_col,
@@ -440,7 +371,6 @@ def ivf_topk(
         dim=dim,
         centroid_pred=centroid_pred,
         nprobe=nprobe,
-        vectorized=vectorized,
     )
     assigned = scored.select(id_col, "cluster_id", "_vd", "_vn")
     q = scored.filter(query_pred).select(
@@ -581,7 +511,6 @@ def ivfpq_topk(
     sub_dim: int = 16,
     k: int = 3,
     nprobe: int = 1,
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """IVF+PQ composed — the production ANN shape (r8 VERDICT #6): the
     IVF coarse quantizer routes the PQ asymmetric-distance scan through
@@ -592,8 +521,8 @@ def ivfpq_topk(
     public PQ paper).
 
     Mechanics: `_ivf_scored` assigns every vector to its nearest seed
-    centroid map-only (shared with `ivf_topk`, bit-identical kernel
-    auto-switch at k ≥ 64); vectors PQ-encode against the seeded
+    centroid map-only (shared with `ivf_topk`, bit-identical numpy
+    kernel from k ≥ 16 centroids); vectors PQ-encode against the seeded
     codebook exactly as `pq_adc_topk` (packed-BIGINT argmin — dense
     codes, hash-aggregable); each query precomputes its LUT and probes
     its `nprobe` best clusters; scoring joins candidate codes to the
@@ -617,7 +546,6 @@ def ivfpq_topk(
         dim=dim,
         centroid_pred=centroid_pred,
         nprobe=nprobe,
-        vectorized=vectorized,
     )
     s_ids = F.explode(
         F.array(*[F.lit(s) for s in range(n_subspaces)])

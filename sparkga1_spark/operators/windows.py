@@ -167,7 +167,13 @@ def grouped_cumsum(
 
     if persist_input:
         df = tracked_persist(df)
-    part = tracked_persist(  # consumed by the local-cumsum pass AND the sums
+    # Persisted for CORRECTNESS, not only reuse: the local-cumsum pass
+    # and the per-partition sums must read ONE evaluation of the range
+    # exchange. Each evaluation draws its own range-bound sample (seeded
+    # per evaluation, over rows whose order varies after a shuffle), so
+    # unless the sample holds every row, a second evaluation computes
+    # the offsets over other partitions than the rows they are added to.
+    part = tracked_persist(
         df.repartitionByRange(num_partitions, *gcols, *ocols).withColumn(
             "_pid", F.spark_partition_id()
         )
@@ -230,7 +236,6 @@ def global_rank(
     order_cols: Sequence[Column | str],
     rank_col: str = "global_rank",
     num_partitions: int | None = None,
-    persist_input: bool = False,
 ) -> DataFrame:
     """Distributed global row_number over a UNIQUE total order — the
     scale-safe replacement for `Window.orderBy(...)` (which funnels the
@@ -244,11 +249,7 @@ def global_rank(
     window is single-partition over ~num_shuffle_partitions rows (like
     vocab's 20-row window, deliberately tiny), broadcast back. Rank
     values are independent of where the sampled range boundaries land
-    because the order is total.
-
-    `persist_input`: same contract as `grouped_cumsum` — cache `df` so
-    the range-boundary sample job and the persisted slice's fill share
-    one evaluation of an expensive input subtree (r13, guide §1.2)."""
+    because the order is total."""
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     if num_partitions is None:
         num_partitions = int(
@@ -256,9 +257,14 @@ def global_rank(
         )
     from sparkga1_spark.operators.cache import tracked_persist
 
-    if persist_input:
-        df = tracked_persist(df)
-    part = tracked_persist(  # consumed by the rank pass AND the counts
+    # Persisted for CORRECTNESS, not only reuse: the rank pass and the
+    # counts must read ONE evaluation of the range exchange. Each
+    # evaluation draws its own range-bound sample (seeded per
+    # evaluation, over rows whose order varies after a shuffle), so
+    # unless the sample holds every row, two evaluations partition
+    # differently and the offsets no longer match the ranks — wrong
+    # ranks.
+    part = tracked_persist(
         df.repartitionByRange(num_partitions, *cols).withColumn(
             "_pid", F.spark_partition_id()
         )

@@ -277,9 +277,6 @@ def a_lpt_schedule(spark, sf_dir):
 
     binned = binning.bin_by_region(_alignments(spark, sf_dir), _seq_dict(spark, sf_dir))
     weights = binned.groupBy("chr_index", "reg").agg(F.count("*").alias("n_reads"))
-    # r13: persist_input measured WORSE here too (1.03 → 1.30 median)
-    # — like gini's rev, the weights aggregate recomputes cheaper than
-    # its cache materializes. Left off.
     return global_rank(
         weights,
         order_cols=[F.desc("n_reads"), "chr_index", "reg"],
@@ -833,65 +830,14 @@ def _minhash_sql_exprs() -> list[str]:
     ]
 
 
-# Session-scoped shared stages for the dedup family (r5 VERDICT #4):
-# x_dedup_minhash_lsh / x_dedup_cc_clusters / x_dedup_keep_canonical all
-# consume the SAME shingles→signatures→bands→pairs (→CC labels)
-# derivation; within one SparkSession the family shares a single
-# memoized plan per (app, sf_dir) instead of re-deriving it per query.
-# The memo stores the DataFrame (deterministic lineage), and every
-# fetch re-registers it with tracked_persist — so after a caller's
-# release_tracked() the data re-materializes on next use (correctness
-# never depends on the cache being warm), while back-to-back family
-# queries in one session (the interactive pattern, and any composed
-# pipeline) pay the pair stage once. Keyed by applicationId, not id():
-# Python can recycle object ids across sessions.
-_DEDUP_STAGE_CACHE: dict = {}
+def _dedup_pairs(spark, sf_dir):
+    """LSH candidate-pair stage (MinHash 8 perms, 4×2 bands)."""
+    return D.minhash_lsh_pairs(_doc_shingle_rows(spark, sf_dir), id_col="doc_id")
 
 
-def _dedup_stage(spark, sf_dir, stage: str):
-    app = spark.sparkContext.applicationId
-    # evict entries from stopped sessions (review-caught: a process
-    # that cycles SparkSessions would otherwise accumulate dead
-    # DataFrame handles forever — one active session is the contract)
-    for k in [k for k in _DEDUP_STAGE_CACHE if k[0] != app]:
-        del _DEDUP_STAGE_CACHE[k]
-    key = (app, sf_dir, stage)
-    df = _DEDUP_STAGE_CACHE.get(key)
-    if (
-        df is not None
-        and stage == "pairs"
-        and not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-    ):
-        # The pair cache was release_tracked()ed: re-using the stale
-        # plan would recompute it with its INTERNAL band persist no
-        # longer registered (the band self-join would then build the
-        # band table twice — measured +0.5s on the cold minhash bench
-        # point). Rebuild fresh so the inner persists re-register;
-        # cc_labels is exempt — its value lives in checkpoint blocks
-        # that release_tracked never frees.
-        df = None
-    if df is None:
-        if stage == "pairs":
-            rows = _doc_shingle_rows(spark, sf_dir)
-            df = D.minhash_lsh_pairs(rows, id_col="doc_id")
-        elif stage == "cc_labels":
-            df = D.connected_components(_dedup_pairs_cached(spark, sf_dir))
-        else:
-            raise ValueError(f"unknown dedup stage: {stage}")
-        _DEDUP_STAGE_CACHE[key] = df
-    from sparkga1_spark.operators.cache import tracked_persist
-
-    return tracked_persist(df)
-
-
-def _dedup_pairs_cached(spark, sf_dir):
-    """Shared LSH candidate-pair stage (MinHash 8 perms, 4×2 bands)."""
-    return _dedup_stage(spark, sf_dir, "pairs")
-
-
-def _dedup_cc_labels_cached(spark, sf_dir):
-    """Shared connected-component labels over the cached pair stage."""
-    return _dedup_stage(spark, sf_dir, "cc_labels")
+def _dedup_cc_labels(spark, sf_dir):
+    """Connected-component labels over the LSH candidate-pair graph."""
+    return D.connected_components(_dedup_pairs(spark, sf_dir))
 
 
 @query(
@@ -975,10 +921,9 @@ SELECT id_a, id_b FROM lsh_pairs
 """,
 )
 def x_dedup_minhash_lsh(spark, sf_dir):
-    """MinHash(8 perms) + LSH(4 bands × 2) candidate near-dup pairs.
-    Consumes the session-shared pair stage (_dedup_pairs_cached) the
-    CC/keep-canonical queries also read."""
-    return _dedup_pairs_cached(spark, sf_dir)
+    """MinHash(8 perms) + LSH(4 bands × 2) candidate near-dup pairs —
+    the stage the CC/keep-canonical queries build on."""
+    return _dedup_pairs(spark, sf_dir)
 
 
 @query(
@@ -1007,9 +952,8 @@ def x_dedup_cc_clusters(spark, sf_dir):
     min-label propagation (operators/dedup.py connected_components);
     the DuckDB oracle computes the same fixpoint via a recursive CTE —
     two independent constructions of transitive closure agreeing on
-    every label. Reads the session-shared pair/label stages
-    (_dedup_cc_labels_cached)."""
-    cc = _dedup_cc_labels_cached(spark, sf_dir)
+    every label."""
+    cc = _dedup_cc_labels(spark, sf_dir)
     return cc.select(
         F.col("id").alias("doc_id"), F.col("comp").alias("component")
     )
@@ -8208,7 +8152,8 @@ def x_incremental_dedup_triage(spark, sf_dir):
 # batch shuffles, into the index's bucket count). This is the 100 TB
 # shape of incremental dedup: the pre-shuffle is paid at index-build
 # time, amortized over every crawl that follows. Memoized per
-# (app, sf_dir) like _dedup_stage; tables are rebuilt per session
+# (app, sf_dir): the index's state is the feature (later batches probe
+# what earlier builds wrote); tables are rebuilt per session
 # (in-memory catalogs don't survive restarts — a deployment would
 # point spark.sql.warehouse.dir + a metastore at durable storage).
 _DEDUP_INDEX_CACHE: dict = {}
@@ -9792,7 +9737,7 @@ def x_dedup_keep_canonical(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    cc = _dedup_cc_labels_cached(spark, sf_dir)
+    cc = _dedup_cc_labels(spark, sf_dir)
     members = cc.select(
         F.col("id").alias("doc_id"), F.col("comp").alias("component")
     ).join(docs.select("doc_id", "n_chars"), "doc_id")
@@ -11878,9 +11823,6 @@ def x_revenue_gini_lorenz(spark, sf_dir):
     # (the two former crossJoin(broadcast(tot)) attaches each replicated
     # the whole rank subtree — 3 BNLs in the r7 plan audit; the totals
     # now ride the plan as ONE once-executed scalar subquery)
-    # r13: persist_input measured WORSE here (8-round A/B 1.83 → 2.09
-    # median) — rev is a cheap scan+aggregate, and caching it costs
-    # more than the sample job's recompute. Left off.
     rk = tracked_persist(
         windows_ops.global_rank(
             rev, order_cols=["cents", "o_custkey"], rank_col="r"
@@ -12561,14 +12503,13 @@ def x_dedup_cluster_size_hist(spark, sf_dir):
     management readout (how much mass sits in pairs vs large cliques
     decides whether keep-canonical or aggressive pruning is the right
     policy; a sudden large-clique mode flags templated/mirrored
-    ingest). Reuses the session-shared pair/CC-label stage
-    (x_dedup_cc_clusters' memoized fixpoint — zero recompute within a
-    session), aggregates component sizes, and derives the singleton
-    row by subtraction from the corpus total (docs absent from the
-    pair graph are clusters of one — never materialized per doc).
-    Scale: two keyed aggregates over the label frame + a 1-row
+    ingest). Builds the same pair/CC-label stage as
+    x_dedup_cc_clusters, aggregates component sizes, and derives the
+    singleton row by subtraction from the corpus total (docs absent
+    from the pair graph are clusters of one — never materialized per
+    doc). Scale: two keyed aggregates over the label frame + a 1-row
     broadcast; strictly cheaper than the CC stage it consumes."""
-    cc = _dedup_cc_labels_cached(spark, sf_dir)
+    cc = _dedup_cc_labels(spark, sf_dir)
     sizes = cc.groupBy("comp").agg(F.count("*").alias("sz"))
     # histogram reused (in-dup total input + final projection): persist
     # so the totals subquery shares one pass over the CC labels

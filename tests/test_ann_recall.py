@@ -253,29 +253,29 @@ def test_mahalanobis_refusals(spark):
     assert "null embedding" in str(ei.value)
 
 
-def test_ivf_vectorized_matches_expression(planted):
+def test_ivf_vectorized_matches_expression(planted, monkeypatch):
     """r8 (r7 VERDICT #8): the Arrow/numpy assignment kernel must be
     BIT-IDENTICAL to the Catalyst expression path — same sequential
     left-fold dot order, same floor-rounding, same (negcos, cid)
     tiebreak — across nprobe settings. Exact tuple equality including
     the cos_sim doubles; any reassociation of the fold would show up
-    here as a last-ulp diff."""
+    here as a last-ulp diff. The path is pinned by moving the
+    centroid-count threshold above and below this fixture's count."""
     cent = (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 1000000)
+
+    def run(min_centroids, nprobe):
+        monkeypatch.setattr(S, "_IVF_NUMPY_MIN_CENTROIDS", min_centroids)
+        return sorted(
+            tuple(r)
+            for r in S.ivf_topk(
+                planted, dim=DIM, centroid_pred=cent, query_pred=_qpred(),
+                k=3, nprobe=nprobe,
+            ).collect()
+        )
+
     for nprobe in (1, 2):
-        expr = sorted(
-            tuple(r)
-            for r in S.ivf_topk(
-                planted, dim=DIM, centroid_pred=cent, query_pred=_qpred(),
-                k=3, nprobe=nprobe, vectorized=False,
-            ).collect()
-        )
-        vec = sorted(
-            tuple(r)
-            for r in S.ivf_topk(
-                planted, dim=DIM, centroid_pred=cent, query_pred=_qpred(),
-                k=3, nprobe=nprobe, vectorized=True,
-            ).collect()
-        )
+        expr = run(1 << 62, nprobe)
+        vec = run(1, nprobe)
         assert expr == vec, f"nprobe={nprobe}: vectorized path diverged"
 
 

@@ -37,22 +37,26 @@ def test_dsum_is_partitioning_invariant(spark, sf_dir):
 
 def test_global_rank_matches_sorted_enumeration(spark, sf_dir):
     """global_rank must equal the rank a single-node sort would assign,
-    for any partition count, over a unique total order."""
+    for any partition count, over a unique total order. The shuffled
+    case runs at 3 partitions, where the range-bound sample is only
+    part of the input (sf0.001 has 1 500 orders): two evaluations of
+    the range exchange would draw two different samples, so it holds
+    only while both passes read one persisted exchange."""
     from sparkga1_spark.operators.windows import global_rank
 
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    ranked = global_rank(
-        od, order_cols=[F.desc("o_totalprice"), "o_orderkey"], rank_col="r",
-        num_partitions=7,
-    ).collect()
-    want = sorted(ranked, key=lambda x: (-x.o_totalprice, x.o_orderkey))
-    assert [r.o_orderkey for r in sorted(ranked, key=lambda x: x.r)] == [
-        r.o_orderkey for r in want
-    ]
-    rs = sorted(r.r for r in ranked)
-    assert rs == list(range(1, len(ranked) + 1))  # a permutation of 1..N
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    for src, nparts in ((orders, 7), (orders.repartition(5, "o_totalprice"), 3)):
+        od = src.select("o_orderkey", "o_custkey", "o_totalprice")
+        ranked = global_rank(
+            od, order_cols=[F.desc("o_totalprice"), "o_orderkey"],
+            rank_col="r", num_partitions=nparts,
+        ).collect()
+        want = sorted(ranked, key=lambda x: (-x.o_totalprice, x.o_orderkey))
+        assert [r.o_orderkey for r in sorted(ranked, key=lambda x: x.r)] == [
+            r.o_orderkey for r in want
+        ]
+        rs = sorted(r.r for r in ranked)
+        assert rs == list(range(1, len(ranked) + 1))  # a permutation of 1..N
 
 
 def test_dsum_davg_cross_engine_on_boundary_values(spark):
@@ -101,16 +105,25 @@ def test_dsum_davg_cross_engine_on_boundary_values(spark):
 
 def test_grouped_cumsum_matches_naive_window(spark, sf_dir):
     """grouped_cumsum must equal the single-task-per-group naive window
-    cumsum exactly (integer values), at any partition count."""
+    cumsum exactly (integer values), at any partition count. The
+    shuffled case runs at 3 partitions, where the range-bound sample is
+    only part of the input, and carries o_totalprice, which the
+    per-partition sums do not read — so after column pruning the two
+    passes' range exchanges differ and Spark cannot reuse one for the
+    other. Two evaluations would draw two different samples: the case
+    holds only while both passes read one persisted exchange."""
     from pyspark.sql import Window
 
     from sparkga1_spark.operators.windows import grouped_cumsum
 
-    od = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .select("o_orderstatus", "o_orderkey")
-        .withColumn("v", (F.col("o_orderkey") % 100).cast("long"))
-    )
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+
+    def with_v(src, *carried):
+        return src.select("o_orderstatus", "o_orderkey", *carried).withColumn(
+            "v", (F.col("o_orderkey") % 100).cast("long")
+        )
+
+    od = with_v(orders)
     w = (
         Window.partitionBy("o_orderstatus")
         .orderBy("o_orderkey")
@@ -120,11 +133,12 @@ def test_grouped_cumsum_matches_naive_window(spark, sf_dir):
         (r.o_orderstatus, r.o_orderkey): r.c
         for r in od.withColumn("c", F.sum("v").over(w)).collect()
     }
-    for nparts in (3, 7):
+    shuffled = with_v(orders.repartition(5, "o_totalprice"), "o_totalprice")
+    for src, nparts in ((od, 3), (od, 7), (shuffled, 3)):
         got = {
             (r.o_orderstatus, r.o_orderkey): r.c
             for r in grouped_cumsum(
-                od,
+                src,
                 group_cols=["o_orderstatus"],
                 order_cols=["o_orderkey"],
                 value_col="v",
@@ -132,7 +146,7 @@ def test_grouped_cumsum_matches_naive_window(spark, sf_dir):
                 num_partitions=nparts,
             ).collect()
         }
-        assert got == want
+        assert got == want, f"nparts={nparts}"
 
 
 def test_grouped_cumsum_empty_group_cols_is_global_running_sum(spark, sf_dir):
@@ -180,10 +194,10 @@ def test_grouped_cumsum_empty_group_cols_is_global_running_sum(spark, sf_dir):
 def test_persist_input_is_result_invariant(spark, sf_dir):
     """persist_input=True (r13: share one input evaluation between the
     range-boundary sample job and the persisted-slice fill) must be a
-    pure execution-strategy change: grouped_cumsum and global_rank
-    results identical to the default path, and the input must actually
-    land in a cache (an InMemoryTableScan under the range exchange)."""
-    from sparkga1_spark.operators.windows import global_rank, grouped_cumsum
+    pure execution-strategy change: grouped_cumsum results identical
+    to the default path, and the input must actually land in a cache
+    (an InMemoryTableScan under the range exchange)."""
+    from sparkga1_spark.operators.windows import grouped_cumsum
 
     od = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -207,11 +221,3 @@ def test_persist_input_is_result_invariant(spark, sf_dir):
     }
     assert cached == base
     assert "InMemoryTableScan" in cached_df._jdf.queryExecution().executedPlan().toString()
-
-    rk = dict(order_cols=[F.desc("v"), "o_orderkey"], rank_col="r")
-    base_r = {r.o_orderkey: r.r for r in global_rank(od, **rk).collect()}
-    cache_r = {
-        r.o_orderkey: r.r
-        for r in global_rank(od, persist_input=True, **rk).collect()
-    }
-    assert cache_r == base_r

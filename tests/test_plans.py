@@ -664,3 +664,74 @@ def test_census_pins_tfidf_single_scan_and_q11_exchange_reuse(spark, sf_dir):
     c = physical_scan_census(q11._jdf.queryExecution().executedPlan())
     assert c["reused_exchanges"] >= 1, c
     assert not any(n > 1 for n in c["file_scans"].values()), c["file_scans"]
+
+
+def test_dedup_query_leaves_no_cached_blocks(spark, sf_dir):
+    """A query leaves no cached blocks behind once its result is
+    collected and the tracked caches are released: x_dedup_cc_clusters'
+    per-round labels are localCheckpointed, so their blocks go only
+    when nothing references the plan any more. The block manager must
+    return to holding no more RDDs than it did before the query."""
+    import gc
+    import time
+
+    from sparkga1_spark.operators.cache import release_tracked
+
+    sc = spark.sparkContext
+
+    def n_cached_rdds() -> int:
+        return len(sc._jsc.sc().getRDDStorageInfo())
+
+    release_tracked()
+    before = n_cached_rdds()
+    df = all_queries()["x_dedup_cc_clusters"](spark, sf_dir)
+    assert df.collect()
+    del df
+    release_tracked()
+    deadline = time.monotonic() + 10
+    while True:
+        gc.collect()
+        sc._jvm.System.gc()
+        left = n_cached_rdds()
+        if left <= before or time.monotonic() > deadline:
+            break
+        time.sleep(0.25)
+    assert left <= before, (before, left)
+
+
+def test_only_session_reads_the_environment():
+    """Plans depend on their inputs and the session conf alone: inside
+    sparkga1_spark/ only session.py reads environment variables, and
+    only SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM."""
+    import ast
+    import pathlib
+
+    import sparkga1_spark
+
+    root = pathlib.Path(sparkga1_spark.__file__).parent
+    reads: dict[str, set] = {}
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "os":
+                names = {a.name for a in node.names}
+                assert not names & {"environ", "getenv"}, (path, names)
+            if not (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("environ", "getenv")
+            ):
+                continue
+            # the key of os.environ.get("X") / os.environ["X"] / os.getenv("X")
+            use = parent[node]
+            if isinstance(use, ast.Attribute):
+                use = parent[use]
+            key = None
+            if isinstance(use, ast.Call) and use.args:
+                key = getattr(use.args[0], "value", None)
+            elif isinstance(use, ast.Subscript):
+                key = getattr(use.slice, "value", None)
+            reads.setdefault(str(path.relative_to(root)), set()).add(key)
+    assert reads == {
+        "session.py": {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+    }, reads

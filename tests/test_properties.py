@@ -300,16 +300,16 @@ def test_set_similarity_routes_agree(spark, sf_dir):
     rows = _doc_shingle_rows(spark, sf_dir)
     pre = {
         (r.id_a, r.id_b): (r.n_shared, r.jaccard)
-        for r in D.set_similarity_pairs(
-            rows, id_col="doc_id", threshold_num=2, threshold_den=5,
-            route="prefix",
+        for r in D.prefix_filter_jaccard_pairs(
+            rows, id_col="doc_id", threshold_num=2, threshold_den=5
         ).collect()
     }
+    # tau=2/5 < 1/2 auto-routes to lsh_refine (the plan assertion below
+    # pins that this frame carries the band join)
     ref = {
         (r.id_a, r.id_b): (r.n_shared, r.jaccard)
         for r in D.set_similarity_pairs(
-            rows, id_col="doc_id", threshold_num=2, threshold_den=5,
-            route="lsh_refine",
+            rows, id_col="doc_id", threshold_num=2, threshold_den=5
         ).collect()
     }
     assert set(ref) <= set(pre), set(ref) - set(pre)
@@ -791,38 +791,33 @@ def test_pareto_frontier_decimal_axis(spark, pts):
     assert got == want
 
 
-def test_set_similarity_shj_form_is_result_invariant(spark, sf_dir):
+def test_set_similarity_shj_form_is_result_invariant(spark, sf_dir, monkeypatch):
     """r14 (guide §3.1): the verification/self joins pick their
     strategy by the corpus side's plan-stat size estimate — broadcast
     below _SHJ_EST_BYTES (fastest locally), shuffled-hash above (the
     only form that survives 100 TB; measured ~2x faster at the 10x
     replica). Pins (a) both arms produce identical pairs, (b) the
-    forced-SHJ arm really plans ShuffledHashJoin and the forced-BHJ
-    arm really broadcasts — so the env/threshold plumbing cannot
-    silently become a no-op."""
-    import os
-
+    SHJ arm (bound below every estimate) really plans ShuffledHashJoin
+    and the BHJ arm (bound above every estimate) really broadcasts —
+    so the threshold plumbing cannot silently become a no-op."""
     from sparkga1_spark.operators import dedup as D
     from sparkga1_spark.plans.queries import _doc_shingle_rows
 
     rows = _doc_shingle_rows(spark, sf_dir)
 
-    def pairs(force: str):
-        os.environ["SPARKGA1_SETSIM_SHJ"] = force
-        try:
-            df = D.prefix_filter_jaccard_pairs(
-                rows, id_col="doc_id", threshold_num=2, threshold_den=5
-            )
-            got = sorted(
-                (r.id_a, r.id_b, r.n_shared, r.jaccard) for r in df.collect()
-            )
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            return got, plan
-        finally:
-            os.environ.pop("SPARKGA1_SETSIM_SHJ", None)
+    def pairs(bound: int):
+        monkeypatch.setattr(D, "_SHJ_EST_BYTES", bound)
+        df = D.prefix_filter_jaccard_pairs(
+            rows, id_col="doc_id", threshold_num=2, threshold_den=5
+        )
+        got = sorted(
+            (r.id_a, r.id_b, r.n_shared, r.jaccard) for r in df.collect()
+        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return got, plan
 
-    bhj_pairs, bhj_plan = pairs("0")
-    shj_pairs, shj_plan = pairs("1")
+    bhj_pairs, bhj_plan = pairs(1 << 62)
+    shj_pairs, shj_plan = pairs(-1)
     assert bhj_pairs == shj_pairs
     assert bhj_pairs, "fixture corpus must produce at least one pair"
     assert "ShuffledHashJoin" in shj_plan
