@@ -91,17 +91,6 @@ def word_ngrams(ws: Column, n: int) -> Column:
     )
 
 
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    """Array form of the shingle hashes (distinct). PERFORMANCE NOTE:
-    higher-order-function lambdas are interpreted (outside whole-stage
-    codegen) and the collapsed projection re-evaluates the word split
-    per element — fine for small docs / previews, but the hot-path
-    operators use shingle_hash_rows below (codegen'd, linear)."""
-    return F.array_distinct(
-        F.transform(word_ngrams(words(text), n), lambda g: stable_hash64(g))
-    )
-
-
 def _gram_rows(docs, *, id_col: str, text_col: str, n: int, spread: bool = True):
     """(id, _g) word n-gram rows — the shared root of the whole
     shingle family.
@@ -137,9 +126,7 @@ def _gram_rows(docs, *, id_col: str, text_col: str, n: int, spread: bool = True)
     the input is a bounded handful of rows."""
     w = docs.select(F.col(id_col), words(F.col(text_col)).alias("_W"))
     if spread:
-        n_parts = int(
-            docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+        n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         w = w.repartition(n_parts, id_col)
     return w.select(
         F.col(id_col),

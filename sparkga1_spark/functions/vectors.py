@@ -40,11 +40,6 @@ def norm(a: Column, dim: int | None = None) -> Column:
     return F.sqrt(dot(a, a, dim))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    """cos = dot / (|a| * |b|); callers round before hashing/ranking."""
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
 COSINE_SQL = (
     "(list_inner_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
     " / (sqrt(list_inner_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[])))"

@@ -1,5 +1,5 @@
-"""Coordinate range-binning (SURVEY.md §1.3, F-6/F-7) — the heart of the
-reference's partitioning model.
+"""Coordinate range-binning (SURVEY.md §1.3, J-1/F-6/F-7) — the heart of
+the reference's partitioning model.
 
 The reference computes `reg = pos / regionSize(chr)` per row inside its
 parser (SamRegionsParser.scala:55-60) against a broadcast Configuration;
@@ -10,39 +10,20 @@ shuffled — the correct plan at any scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
-def with_chr_dim(
-    facts: DataFrame,
-    seq_dict: DataFrame,
-    on: str = "chr_index",
-) -> DataFrame:
-    """J-1: broadcast dimension lookup (SparkGA1.scala:1006). The
-    sequence dictionary is tiny (≤ thousands of contigs) — always
-    broadcast, never shuffle the fact table for it."""
-    return facts.join(F.broadcast(seq_dict), on=on, how="inner")
+def bin_by_region(facts: DataFrame, seq_dict: DataFrame) -> DataFrame:
+    """Join facts to the dictionary on `chr_index` and derive the region
+    bin `reg = floor(pos / region_size)` — the declarative form of the
+    reference's (chr, reg) keying.
 
-
-def region_bin(pos: str | Column = "pos", region_size: str | Column = "region_size") -> Column:
-    """F-7: `reg = floor(pos / region_size)` (SamRegionsParser.scala:60).
-
-    floor of an IEEE division of two ints is exact for the coordinate
-    ranges involved (< 2^53), so the same expression is oracle-safe in
+    J-1: the sequence dictionary is tiny (≤ thousands of contigs), so
+    it is always broadcast (SparkGA1.scala:1006) and the fact table is
+    never shuffled for it. F-7 (SamRegionsParser.scala:60): floor of an
+    IEEE division of two ints is exact for the coordinate ranges
+    involved (< 2^53), so the same expression is oracle-safe in
     DuckDB."""
-    p = F.col(pos) if isinstance(pos, str) else pos
-    r = F.col(region_size) if isinstance(region_size, str) else region_size
-    return F.floor(p / r).cast("int")
-
-
-def bin_by_region(
-    facts: DataFrame,
-    seq_dict: DataFrame,
-    pos_col: str = "pos",
-    out_col: str = "reg",
-) -> DataFrame:
-    """Join facts to the dictionary and derive the region bin column —
-    the declarative form of the reference's (chr, reg) keying."""
-    return with_chr_dim(facts, seq_dict).withColumn(
-        out_col, region_bin(pos_col, "region_size")
+    return facts.join(F.broadcast(seq_dict), on="chr_index", how="inner").withColumn(
+        "reg", F.floor(F.col("pos") / F.col("region_size")).cast("int")
     )

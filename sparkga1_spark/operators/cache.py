@@ -71,13 +71,6 @@ def scalar_subq(agg_df: DataFrame) -> dict[str, Column]:
     return {f.name: s.getField(f.name) for f in agg_df.schema.fields}
 
 
-def attach_scalar_agg(df: DataFrame, agg_df: DataFrame) -> DataFrame:
-    """Drop-in replacement for `df.crossJoin(F.broadcast(agg_df))` when
-    `agg_df` is a 1-row aggregate: same output columns, attached as a
-    once-executed runtime ScalarSubquery (see `scalar_subq`)."""
-    return df.withColumns(scalar_subq(agg_df))
-
-
 def tracked_persist(df: DataFrame) -> DataFrame:
     """persist() + register for bulk release."""
     df = df.persist()

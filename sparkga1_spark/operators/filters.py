@@ -1,72 +1,33 @@
-"""Row filters (SURVEY.md §2.2, F-1..F-4, F-9).
+"""Row filters shared by several plans (SURVEY.md §2.2, F-2, F-9).
 
-The reference applies these imperatively inside its ingest callback
-(SamRegionsParser.scala:34-53); here they are Column predicates so
-Catalyst pushes them into the scan (PushedFilters) and prunes columns —
-at 100 TB that is the difference between reading the table and reading
-a slice of it.
+The reference applies its filters imperatively inside its ingest
+callback (SamRegionsParser.scala:34-53); here they are Column
+predicates so Catalyst pushes them into the scan (PushedFilters) and
+prunes columns — at 100 TB that is the difference between reading the
+table and reading a slice of it. Filters with a single caller (the
+ignore list, F-4) are written inline in that query as a plain
+`filter` or broadcast `left_anti` join.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
-def strip_headers(df: DataFrame, col: str = "line", prefix: str = "@") -> DataFrame:
-    """F-1: route header/comment lines out of the record stream
-    (SamRegionsParser.scala:34-38 '@', SparkGA1.scala:970-984 '#')."""
-    return df.filter(~F.col(col).startswith(prefix))
+def filter_unmapped(df: DataFrame, mask: int = 4) -> DataFrame:
+    """F-2: drop rows whose `flags` bit `mask` is set — the
+    unmapped-read test `(flags & mask) == 0` of
+    SamRegionsParser.scala:46-47, generalized to any flag bit."""
+    return df.filter(F.col("flags").bitwiseAND(F.lit(mask)) == 0)
 
 
-def bitmask_clear(col: str | Column, mask: int) -> Column:
-    """Predicate: (col & mask) == 0 — the unmapped-read test of
-    SamRegionsParser.scala:46-47 generalized to any flag bit."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.bitwiseAND(F.lit(mask)) == 0
-
-
-def filter_unmapped(df: DataFrame, flags_col: str = "flags", mask: int = 4) -> DataFrame:
-    """F-2: drop rows whose flag bit `mask` is set."""
-    return df.filter(bitmask_clear(flags_col, mask))
-
-
-def filter_null_ref(df: DataFrame, chr_col: str = "chr_name") -> DataFrame:
-    """F-3: drop rows with unplaced reference ('*' chr,
-    SamRegionsParser.scala:49-50)."""
-    return df.filter(F.col(chr_col) != "*")
-
-
-def filter_ignore_list(
-    df: DataFrame, col: str, ignore: Sequence[str]
-) -> DataFrame:
-    """F-4: NOT IN against a configured set (Configuration.java:100-107,
-    probed at SamRegionsParser.scala:52-53).
-
-    A literal isin list compiles into the plan and pushes down; for a
-    large ignore list use a broadcast left_anti join instead
-    (filter_ignore_table).
-    """
-    return df.filter(~F.col(col).isin(list(ignore)))
-
-
-def filter_ignore_table(df: DataFrame, ignore_df: DataFrame, on: str) -> DataFrame:
-    """F-4 at scale: anti-join form for ignore lists too big to inline.
-    The small side is broadcast — no shuffle of the fact table."""
-    return df.join(F.broadcast(ignore_df), on=on, how="left_anti")
-
-
-def fix_intervals(
-    df: DataFrame, start: str = "start", end: str = "end"
-) -> DataFrame:
-    """F-9: interval sanity fix (SparkGA1.scala:684-697) — zero-length
-    intervals get end+1; rows with null/negative bounds are dropped."""
+def fix_intervals(df: DataFrame) -> DataFrame:
+    """F-9: interval sanity fix (SparkGA1.scala:684-697) on
+    `start`/`end` — zero-length intervals get end+1; rows with
+    null/negative bounds are dropped."""
+    start, end = F.col("start"), F.col("end")
     return (
-        df.filter(F.col(start).isNotNull() & F.col(end).isNotNull())
-        .filter((F.col(start) >= 0) & (F.col(end) >= F.col(start)))
-        .withColumn(
-            end,
-            F.when(F.col(start) == F.col(end), F.col(end) + 1).otherwise(F.col(end)),
-        )
+        df.filter(start.isNotNull() & end.isNotNull())
+        .filter((start >= 0) & (end >= start))
+        .withColumn("end", F.when(start == end, end + 1).otherwise(end))
     )

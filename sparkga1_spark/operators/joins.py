@@ -1,9 +1,12 @@
-"""Join operators (SURVEY.md §2.4, J-1..J-3).
+"""Join operators (SURVEY.md §2.4, J-2).
 
 The reference has no general join executor — its three joins are a
 broadcast dimension probe, an external `bedtools intersect`, and
-known-sites anti semantics inside GATK. Here they are DataFrame joins;
-the one needing real design is the interval-overlap range join: naively
+known-sites anti semantics inside GATK. Here they are DataFrame joins:
+the dimension probe (J-1) lives in `binning.bin_by_region`, the
+known-sites semi/anti forms (J-3) are one broadcast `left_semi` /
+`left_anti` join written in each query. The one needing real design
+is the interval-overlap range join: naively
 `a.chr==b.chr AND a.pos BETWEEN b.start AND b.end` degenerates to a
 BroadcastNestedLoopJoin. The scale-safe shape is bin-bucket + equi-join
 + residual predicate (SURVEY.md §4 row 14): explode each interval over
@@ -18,37 +21,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def semi_join_sites(
-    facts: DataFrame, sites: DataFrame, on: list[str] | None = None
-) -> DataFrame:
-    """J-3 (positive form): keep rows at known sites. Small site lists
-    broadcast; Catalyst plans BroadcastHashJoin(LeftSemi)."""
-    return facts.join(F.broadcast(sites), on=on or ["chr_index", "pos"], how="left_semi")
-
-
-def anti_join_sites(
-    facts: DataFrame, sites: DataFrame, on: list[str] | None = None
-) -> DataFrame:
-    """J-3: exclude known sites (the BQSR `-knownSites` semantics,
-    SparkGA1.scala:898-905)."""
-    return facts.join(F.broadcast(sites), on=on or ["chr_index", "pos"], how="left_anti")
-
-
 def interval_overlap_join(
     points: DataFrame,
     intervals: DataFrame,
     *,
-    chr_col: str = "chr_index",
-    point_start: str = "pos",
-    point_end: str = "end_pos",
-    ivl_start: str = "start",
-    ivl_end: str = "end",
     bin_width: int = 10_000,
     broadcast_intervals: bool = False,
 ) -> DataFrame:
-    """J-2: overlap join of point-ranges vs intervals, half-open overlap
-    test `p.start < i.end AND i.start < p.end` (bedtools intersect
-    semantics, SparkGA1.scala:703-732).
+    """J-2: overlap join of point-ranges [pos, end_pos) vs intervals
+    [start, end) on `chr_index`, half-open overlap test
+    `pos < end AND start < end_pos` (bedtools intersect semantics,
+    SparkGA1.scala:703-732).
 
     Intervals are exploded across the bins they touch (F.sequence — an
     interval of length L lands in ~1+L/bin_width rows); points are
@@ -65,22 +48,20 @@ def interval_overlap_join(
             F.floor(F.greatest(F.col(lo), F.col(hi) - 1) / bin_width).cast("long"),
         )
 
-    binned_ivl = intervals.withColumn("_bin", F.explode(bins(ivl_start, ivl_end)))
+    binned_ivl = intervals.withColumn("_bin", F.explode(bins("start", "end")))
     if broadcast_intervals:
         binned_ivl = F.broadcast(binned_ivl)
-    binned_pts = points.withColumn("_bin", F.explode(bins(point_start, point_end)))
-    overlap = (F.col(point_start) < F.col(ivl_end)) & (
-        F.col(ivl_start) < F.col(point_end)
-    )
+    binned_pts = points.withColumn("_bin", F.explode(bins("pos", "end_pos")))
+    overlap = (F.col("pos") < F.col("end")) & (F.col("start") < F.col("end_pos"))
     # Both sides are exploded, so an overlapping pair co-occurs in every
     # shared bin; keep exactly the one where the later-starting range
     # begins — no post-join dedup (which would shuffle again) needed.
     anchor = F.col("_bin") == F.greatest(
-        F.floor(F.col(point_start) / bin_width).cast("long"),
-        F.floor(F.col(ivl_start) / bin_width).cast("long"),
+        F.floor(F.col("pos") / bin_width).cast("long"),
+        F.floor(F.col("start") / bin_width).cast("long"),
     )
     return (
-        binned_pts.join(binned_ivl, on=[chr_col, "_bin"], how="inner")
+        binned_pts.join(binned_ivl, on=["chr_index", "_bin"], how="inner")
         .filter(overlap & anchor)
         .drop("_bin")
     )

@@ -1434,10 +1434,6 @@ QOI_MAGIC = b"qoif"
 _QOI_END = b"\x00" * 7 + b"\x01"
 
 
-def _qoi_hash(r: int, g: int, b: int, a: int) -> int:
-    return (r * 3 + g * 5 + b * 7 + a * 11) % 64
-
-
 def build_qoi(pixels) -> bytes:
     """HxWx3 uint8 RGB array → QOI bytes (channels=3, sRGB-linear
     colorspace byte 0). Emits every op the spec defines when the data
@@ -1474,7 +1470,8 @@ def build_qoi(pixels) -> bytes:
         if run:
             emit(0xC0 | (run - 1))
             run = 0
-        k = (r * 3 + g * 5 + b * 7 + 2805) % 64  # _qoi_hash with a=255
+        # QOI index hash (r*3 + g*5 + b*7 + a*11) % 64 with a = 255
+        k = (r * 3 + g * 5 + b * 7 + 2805) % 64
         if index[k] == px:
             emit(k)
         else:

@@ -44,7 +44,7 @@ def brute_force_topk(
     # Pre-join projections do the per-row work once: the float→double
     # cast (inlined per element_at otherwise — a full-array cast × dim
     # per pair) and the norm. The per-pair expression is then just the
-    # dot product (same arithmetic as cosine() — dot/(na*nb)).
+    # dot product, divided by the two norms: cos = dot/(na*nb).
     q = queries.select(
         F.col(id_col).alias("query_id"),
         vectors.to_double(F.col(vec_col)).alias("_qv"),
@@ -67,9 +67,7 @@ def brute_force_topk(
     # extra exchange ships one pass of the (already-projected) vectors;
     # this kernel is the sanctioned small/oracle baseline (see plan
     # note above), never the 100 TB path.
-    n_parts = int(
-        candidates.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    n_parts = int(candidates.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     c = c.repartition(n_parts, "cand_id")
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("cand_id"))

@@ -20,23 +20,23 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
-from sparkga1_spark.operators.cache import attach_scalar_agg, tracked_persist
+from sparkga1_spark.operators.cache import scalar_subq, tracked_persist
 
 
-def spread_if_narrow(df: DataFrame, *cols: str, factor: int = 2) -> DataFrame:
+def spread_if_narrow(df: DataFrame, *cols: str) -> DataFrame:
     """Input-skew fix (guide §2.5 "one huge unsplittable file"): when
     the planned scan yields far fewer partitions than the session's
     shuffle parallelism (single-row-group / tiny-file inputs), hash-
     repartition on `cols` so a downstream map-heavy chain (broadcast
     join + Generate + partial aggregate) runs cluster-wide instead of
     serializing on the scan task. A NO-OP whenever the input already
-    splits to >= shuffle.partitions / factor tasks — the 100 TB case —
+    splits to >= shuffle.partitions / 2 tasks — the 100 TB case —
     so production plans never pay the extra exchange. The partition
     probe is planning-only (queryExecution.toRdd builds no job).
     """
     spark = df.sparkSession
-    target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if df.rdd.getNumPartitions() * factor >= target:
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if df.rdd.getNumPartitions() * 2 >= target:
         return df
     return df.repartition(target, *cols)
 
@@ -68,7 +68,7 @@ def salt_by_quantiles(
     counts = tracked_persist(df.groupBy(*keys).agg(F.count("*").alias("_n")))
     avg_row = counts.agg(F.avg("_n").alias("_avg"))
     heavy = (
-        attach_scalar_agg(counts, avg_row)
+        counts.withColumns(scalar_subq(avg_row))
         .filter(F.col("_n") > F.col("_avg") * skew_factor)
         .withColumn(
             "_segments",

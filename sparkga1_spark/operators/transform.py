@@ -12,14 +12,14 @@ Arrow-batched pandas transform family:
   a hot region spreads over tasks as position-disjoint slices (the
   reference's Part-2 re-split), which is valid only for a
   position-local `fn`.
-- map_batches: `mapInPandas` over partitions — the X-1 shape (chunk in
-  → many records out, a flatMap-style UDTF).
 - pipe_partitions: the rdd.pipe analog for true external binaries, kept
   behind one function so the subprocess surface is a single audited
   point.
+- nfc_normalize: the one text step that needs Python's Unicode tables.
 
-These are the ONLY sanctioned Python-in-the-loop entry points; every
-relational operator stays JVM-side.
+The X-1 shape (chunk in → many records out, a flatMap-style UDTF) is a
+plain `mapInPandas` in the query that needs it. Every relational
+operator stays JVM-side.
 """
 
 from __future__ import annotations
@@ -70,7 +70,7 @@ def apply_per_group(
     """
     import numpy as np
 
-    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     sort_cols = [*keys, *([split_on] if split_on else [])]
 
     def call(runs: list[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -101,48 +101,26 @@ def apply_per_group(
     return src.mapInPandas(gen, schema=schema)
 
 
-def map_batches(
-    df: DataFrame,
-    *,
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: str,
-) -> DataFrame:
-    """X-1 shape: per-partition batch flatMap (`mapInPandas`). `fn` maps
-    one pandas batch to an output frame of any row count."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield fn(pdf)
-
-    return df.mapInPandas(gen, schema=schema)
-
-
-def pipe_partitions(
-    df: DataFrame,
-    *,
-    cmd: list[str],
-    in_col: str = "line",
-    out_field: str = "line",
-) -> DataFrame:
+def pipe_partitions(df: DataFrame, *, cmd: list[str]) -> DataFrame:
     """rdd.pipe analog (the reference's bwa spawn, SparkGA1.scala:128-143):
-    stream `in_col` lines through an external command per partition,
-    yield stdout lines. Used for true external tools; tests use
-    deterministic commands (e.g. sed) since no genomics binaries ship in
-    this environment."""
+    stream the `line` column through an external command per partition,
+    yield its stdout lines as `line`. Used for true external tools;
+    tests use deterministic commands (e.g. sed) since no genomics
+    binaries ship in this environment."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             proc = subprocess.run(
                 cmd,
-                input="\n".join(pdf[in_col].astype(str)) + "\n",
+                input="\n".join(pdf["line"].astype(str)) + "\n",
                 capture_output=True,
                 text=True,
                 check=True,
             )
             lines = [ln for ln in proc.stdout.split("\n") if ln]
-            yield pd.DataFrame({out_field: lines})
+            yield pd.DataFrame({"line": lines})
 
-    return df.mapInPandas(run, schema=f"{out_field} string")
+    return df.mapInPandas(run, schema="line string")
 
 
 # Unicode control/format characters every curation recipe strips before

@@ -1,10 +1,13 @@
 """Window-function operators (SURVEY.md §2.5/§2.7).
 
-These replace three hand-rolled mechanisms of the reference:
+These replace hand-rolled mechanisms of the reference:
 - RegionIterator.java:101-132 interval coalescing → gaps-and-islands
 - SparkGA1.scala:289-480 equal-frequency re-split → ntile / range bucketing
-- SparkGA1.scala:601-610 per-region stable sort → sortWithinPartitions /
-  ranked windows
+- SparkGA1.scala:1190-1192 sortByKey + zipWithIndex → a distributed
+  running count (`global_rank` over `grouped_cumsum`)
+
+The per-region stable sort (SparkGA1.scala:601-610) needs no helper: the
+queries that observe it write `F.row_number().over(w)` themselves.
 
 Scale note: a Window over `partitionBy(chr)` shuffles once on chr and
 sorts within partitions — the same single shuffle the reference pays,
@@ -66,11 +69,11 @@ def equal_frequency_buckets(
     partition_cols: Sequence[str],
     order_cols: Sequence[str],
     n_buckets: int,
-    out_col: str = "bucket",
 ) -> DataFrame:
-    """P2-4: equal-count bucketing of rows within each partition —
-    the declarative form of the reference's gather-sort-cut histogram
-    re-split (SparkGA1.scala:304-418). `order_cols` must include a
+    """P2-4: equal-count bucketing of rows within each partition into a
+    `bucket` column (1..n_buckets) — the declarative form of the
+    reference's gather-sort-cut histogram re-split
+    (SparkGA1.scala:304-418). `order_cols` must include a
     unique tiebreak for deterministic output.
 
     At scale prefer `repartitionByRange` (sampling-based, no global
@@ -78,45 +81,14 @@ def equal_frequency_buckets(
     explicit bucket id; this ntile form is the exact-semantics version.
     """
     w = Window.partitionBy(*partition_cols).orderBy(*[F.col(c) for c in order_cols])
-    return df.withColumn(out_col, F.ntile(int(n_buckets)).over(w))
-
-
-def rank_in_group(
-    df: DataFrame,
-    *,
-    partition_cols: Sequence[str],
-    order_cols: Sequence[Column | str],
-    out_col: str = "rn",
-) -> DataFrame:
-    """O-1 as an observable result: row_number within each group by the
-    given (unique) ordering — the per-region coordinate sort of
-    SparkGA1.scala:741-747 with the rank materialized."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    w = Window.partitionBy(*partition_cols).orderBy(*cols)
-    return df.withColumn(out_col, F.row_number().over(w))
-
-
-def top_k_per_group(
-    df: DataFrame,
-    *,
-    partition_cols: Sequence[str],
-    order_cols: Sequence[Column | str],
-    k: int,
-) -> DataFrame:
-    """Top-k per group (not in the reference — SURVEY.md §2.5 notes it
-    comes free): rank ≤ k with a unique ordering. Catalyst pushes the
-    limit into the sort per partition."""
-    ranked = rank_in_group(
-        df, partition_cols=partition_cols, order_cols=order_cols, out_col="_rn"
-    )
-    return ranked.filter(F.col("_rn") <= k).drop("_rn")
+    return df.withColumn("bucket", F.ntile(int(n_buckets)).over(w))
 
 
 def grouped_cumsum(
     df: DataFrame,
     *,
     group_cols: Sequence[str],
-    order_cols: Sequence[str],
+    order_cols: Sequence[Column | str],
     value_col: Column | str,
     out_col: str = "cumsum",
     num_partitions: int | None = None,
@@ -129,13 +101,14 @@ def grouped_cumsum(
     few and huge (e.g. a per-language cumsum over a 100 TB corpus:
     the naive window funnels each language through ONE task).
 
-    Same two-pass shape as `global_rank`: range-partition on
-    (group, order) so every partition holds a contiguous slice of one
-    or a few groups, cumsum WITHIN (partition, group) via a local
-    window, then add per-(partition, group) prefix offsets. The offset
-    table is ≤ num_partitions × n_groups_touching_boundaries rows —
-    tiny — and its prefix window is per-group over ≤ num_partitions
-    rows, then broadcast back. Results are independent of where the
+    Two passes, and `global_rank` is this sum over a column of ones
+    with no group: range-partition on (group, order) so every
+    partition holds a contiguous slice of one or a few groups, cumsum
+    WITHIN (partition, group) via a local window, then add
+    per-(partition, group) prefix offsets. The offset table is
+    ≤ num_partitions × n_groups_touching_boundaries rows — tiny — and
+    its prefix window is per-group over ≤ num_partitions rows, then
+    broadcast back. Results are independent of where the
     sampled range boundaries land because the order is total.
 
     `extra_specs` (r13 optimization, guide §2.4): additional
@@ -160,9 +133,7 @@ def grouped_cumsum(
         for v, out in [(value_col, out_col), *extra_specs]
     ]
     if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+        num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     from sparkga1_spark.operators.cache import tracked_persist
 
     if persist_input:
@@ -239,49 +210,18 @@ def global_rank(
 ) -> DataFrame:
     """Distributed global row_number over a UNIQUE total order — the
     scale-safe replacement for `Window.orderBy(...)` (which funnels the
-    entire input through one task; the round-1 'by contract' weakness of
-    O-2/O-4).
-
-    Two-pass classic (the sortByKey+zipWithIndex shape of
-    SparkGA1.scala:1190-1192, DataFrame-native): range-partition by the
-    order key, rank WITHIN each partition, then add per-partition prefix
-    offsets. The offset table is one row per partition — its cumsum
-    window is single-partition over ~num_shuffle_partitions rows (like
-    vocab's 20-row window, deliberately tiny), broadcast back. Rank
-    values are independent of where the sampled range boundaries land
-    because the order is total."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    from sparkga1_spark.operators.cache import tracked_persist
-
-    # Persisted for CORRECTNESS, not only reuse: the rank pass and the
-    # counts must read ONE evaluation of the range exchange. Each
-    # evaluation draws its own range-bound sample (seeded per
-    # evaluation, over rows whose order varies after a shuffle), so
-    # unless the sample holds every row, two evaluations partition
-    # differently and the offsets no longer match the ranks — wrong
-    # ranks.
-    part = tracked_persist(
-        df.repartitionByRange(num_partitions, *cols).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-    )
-    w_local = Window.partitionBy("_pid").orderBy(*cols)
-    counts = part.groupBy("_pid").agg(F.count("*").alias("_n"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
-    ).select("_pid", "_off")
-    return (
-        part.withColumn("_lr", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), "_pid")
-        # long, not int: at the >2^31-row scale this operator exists for,
-        # an int rank would silently wrap in non-ANSI mode
-        .withColumn(rank_col, (F.col("_lr") + F.col("_off")).cast("long"))
-        .drop("_pid", "_lr", "_off")
+    entire input through one task). The rank is the running count of
+    rows, i.e. `grouped_cumsum` of ones with no group: the
+    sortByKey+zipWithIndex shape of SparkGA1.scala:1190-1192,
+    DataFrame-native. The column is a long (a >2^31-row input cannot
+    wrap it)."""
+    return grouped_cumsum(
+        df,
+        group_cols=(),
+        order_cols=order_cols,
+        value_col=F.lit(1),
+        out_col=rank_col,
+        num_partitions=num_partitions,
     )
 
 

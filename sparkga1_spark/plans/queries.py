@@ -28,12 +28,7 @@ from sparkga1_spark.functions.numeric import (
     hround,
 )
 from sparkga1_spark.operators import binning, filters
-from sparkga1_spark.operators.cache import (
-    attach_scalar_agg,
-    scalar_lits,
-    scalar_subq,
-    tracked_persist,
-)
+from sparkga1_spark.operators.cache import scalar_lits, scalar_subq, tracked_persist
 from sparkga1_spark.operators import windows as windows_ops
 from sparkga1_spark.plans.registry import query
 from sparkga1_spark.sources import fixtures
@@ -167,7 +162,7 @@ def f_mapped_clean_projection(spark, sf_dir):
     al = _alignments(spark, sf_dir)
     al = filters.filter_unmapped(al, mask=4)
     al = filters.filter_unmapped(al, mask=8)
-    al = filters.filter_ignore_list(al, "chr_index", [22, 23, 24])
+    al = al.filter(~F.col("chr_index").isin([22, 23, 24]))
     return al.filter(F.col("mapq") >= 20).select(
         "read_name", "chr_index", "pos", "mapq",
         (F.col("flags").cast("long") * 2).alias("flags2"),
@@ -382,13 +377,12 @@ GROUP BY chr_index
 """,
 )
 def j_semi_known_sites(spark, sf_dir):
-    """J-3 semi form: reads AT known sites (broadcast left_semi)."""
-    from sparkga1_spark.operators.joins import semi_join_sites
-
+    """J-3 semi form: reads AT known sites. The site list is small, so
+    it is broadcast: Catalyst plans BroadcastHashJoin(LeftSemi)."""
     al = _alignments(spark, sf_dir)
     ks = fixtures.known_sites(load_table(spark, sf_dir, "lineitem"))
     return (
-        semi_join_sites(al, ks)
+        al.join(F.broadcast(ks), ["chr_index", "pos"], "left_semi")
         .groupBy("chr_index")
         .agg(F.count("*").alias("n_at_known"),
              F.sum("mapq").cast("long").alias("sum_mapq"))
@@ -408,13 +402,13 @@ GROUP BY chr_index
 )
 def j_anti_known_sites(spark, sf_dir):
     """J-3 anti form: the BQSR -knownSites exclusion
-    (SparkGA1.scala:898-905)."""
-    from sparkga1_spark.operators.joins import anti_join_sites
-
+    (SparkGA1.scala:898-905) as a broadcast left_anti join."""
     al = _alignments(spark, sf_dir)
     ks = fixtures.known_sites(load_table(spark, sf_dir, "lineitem"))
-    return anti_join_sites(al, ks).groupBy("chr_index").agg(
-        F.count("*").alias("n_novel")
+    return (
+        al.join(F.broadcast(ks), ["chr_index", "pos"], "left_anti")
+        .groupBy("chr_index")
+        .agg(F.count("*").alias("n_novel"))
     )
 
 
@@ -602,7 +596,7 @@ def p2_skew_detect(spark, sf_dir):
     avg = weights.agg(F.avg("n_reads").alias("_avg"))
     seg = F.floor(F.col("n_reads") * 4.0 / F.col("_avg") + 0.5)
     return (
-        attach_scalar_agg(weights, avg)
+        weights.withColumns(scalar_subq(avg))
         .withColumn("segments", seg.cast("int"))
         .filter(F.col("segments") > 1)
         .select("chr_index", "reg", "n_reads", "segments")
@@ -722,12 +716,11 @@ WHERE rn = 1
 def o_secondary_sort_first(spark, sf_dir):
     """O-1: per-region coordinate sort (SparkGA1.scala:741-747) made
     observable — the first record of each (chr, reg) under the sort."""
-    from sparkga1_spark.operators.windows import rank_in_group
+    from pyspark.sql import Window
 
     binned = binning.bin_by_region(_alignments(spark, sf_dir), _seq_dict(spark, sf_dir))
-    ranked = rank_in_group(
-        binned, partition_cols=("chr_index", "reg"), order_cols=("pos", "read_name")
-    )
+    w = Window.partitionBy("chr_index", "reg").orderBy("pos", "read_name")
+    ranked = binned.withColumn("rn", F.row_number().over(w))
     return ranked.filter(F.col("rn") == 1).select(
         "chr_index", "reg",
         F.col("read_name").alias("first_read"), F.col("pos").alias("first_pos"),
@@ -749,16 +742,19 @@ WHERE rn <= 3
 """,
 )
 def o_topk_per_chr(spark, sf_dir):
-    """Top-k per group (SURVEY.md §2.5 addition): best 3 reads per chr."""
-    from sparkga1_spark.operators.windows import top_k_per_group
+    """Top-k per group (SURVEY.md §2.5 addition): best 3 reads per chr.
+    The filter is on the materialized row number, which Catalyst turns
+    into a WindowGroupLimit: the limit is pushed into the per-partition
+    sort."""
+    from pyspark.sql import Window
 
     al = _alignments(spark, sf_dir)
-    return top_k_per_group(
-        al,
-        partition_cols=("chr_index",),
-        order_cols=(F.desc("mapq"), "read_name"),
-        k=3,
-    ).select("chr_index", "read_name", "mapq")
+    w = Window.partitionBy("chr_index").orderBy(F.desc("mapq"), "read_name")
+    return (
+        al.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= 3)
+        .select("chr_index", "read_name", "mapq")
+    )
 
 
 @query(
@@ -802,8 +798,8 @@ from sparkga1_spark.functions import vectors as V  # noqa: E402
 from sparkga1_spark.operators import dedup as D  # noqa: E402
 from sparkga1_spark.operators import similarity as S  # noqa: E402
 
-# doc_id → distinct word-3-gram shingle hashes; mirrored by
-# functions/text.py shingle_hashes (see parity notes there).
+# doc_id → distinct word-3-gram shingle hashes; the DuckDB mirror of
+# functions/text.py shingle_hash_rows (see the notes in its docstring).
 DOC_SHINGLES_SQL = """
   SELECT doc_id, sh FROM (
     SELECT doc_id,
@@ -1307,19 +1303,18 @@ def x_flatmap_records(spark, sf_dir):
     dataflow of bwaRun, SparkGA1.scala:63-217)."""
     import pandas as pd
 
-    from sparkga1_spark.operators.transform import map_batches
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def explode_words(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for doc_id, text_val in zip(pdf["doc_id"], pdf["text"]):
-            for i, w in enumerate(text_val.strip().split()):
-                rows.append((doc_id, i + 1, w))
-        return pd.DataFrame(rows, columns=["doc_id", "word_idx", "word"])
+    def explode_words(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id, text_val in zip(pdf["doc_id"], pdf["text"]):
+                for i, w in enumerate(text_val.strip().split()):
+                    rows.append((doc_id, i + 1, w))
+            yield pd.DataFrame(rows, columns=["doc_id", "word_idx", "word"])
 
-    return map_batches(
-        docs, fn=explode_words, schema="doc_id long, word_idx int, word string"
+    return docs.mapInPandas(
+        explode_words, schema="doc_id long, word_idx int, word string"
     )
 
 
@@ -2866,8 +2861,8 @@ def x_pack_context_windows(spark, sf_dir):
     `Window.partitionBy(lang)` cumsum funnels each language through
     ONE task (languages are few and huge at 100 TB), so the running
     sum is computed with `grouped_cumsum` — the distributed two-pass
-    range-partition scheme of `global_rank`: local cumsum per
-    (range-partition, lang) slice plus a broadcast prefix-offset
+    range-partition scheme that `global_rank` also runs: local cumsum
+    per (range-partition, lang) slice plus a broadcast prefix-offset
     table of ≤ partitions×langs rows. Same exact integer results at
     any parallelism; no single-task stage anywhere in the plan."""
     from sparkga1_spark.operators.windows import grouped_cumsum
@@ -2938,10 +2933,10 @@ def x_quality_quantile_filter(spark, sf_dir):
     score = hround(T.alpha_ratio(F.col("text")), 6)
     scored = docs.select("lang", "doc_id", "n_chars", score.alias("score"))
     ranked = grouped_cumsum(
-        scored.withColumn("_one", F.lit(1)),
+        scored,
         group_cols=["lang"],
         order_cols=["score", "doc_id"],
-        value_col="_one",
+        value_col=F.lit(1),
         out_col="_rk",
         # r13 (guide §1.2): one alpha-ratio regex pass instead of two
         persist_input=True,
@@ -3068,7 +3063,7 @@ def x_column_profile_histogram(spark, sf_dir):
     10-row shuffle."""
     li = load_table(spark, sf_dir, "lineitem")
     bounds = li.agg(F.min("l_partkey").alias("mn"), F.max("l_partkey").alias("mx"))
-    binned = attach_scalar_agg(li.select("l_partkey"), bounds).select(
+    binned = li.select("l_partkey").withColumns(scalar_subq(bounds)).select(
         F.expr(
             "CAST((l_partkey - mn) * 10 DIV (mx - mn + 1) AS BIGINT)"
         ).alias("bin"),
@@ -3411,7 +3406,7 @@ def x_benford_digit_audit(spark, sf_dir):
     p = tracked_persist(d.groupBy("digit").agg(F.count("*").alias("n_obs")))
     t = p.agg(F.sum("n_obs").alias("total"))
     return (
-        attach_scalar_agg(p, t)
+        p.withColumns(scalar_subq(t))
         .select(
             "digit",
             F.col("n_obs").cast("long").alias("n_obs"),
@@ -4824,11 +4819,9 @@ def a_covariate_table(spark, sf_dir):
     """A-8: BaseRecalibrator's covariate table (SparkGA1.scala:901-905)
     — group by (read group, quality bin, cycle bin) over loci NOT in
     known sites (anti join), with a deterministic mismatch stand-in."""
-    from sparkga1_spark.operators.joins import anti_join_sites
-
     al = _alignments(spark, sf_dir)
     ks = fixtures.known_sites(load_table(spark, sf_dir, "lineitem"))
-    novel = anti_join_sites(al, ks)
+    novel = al.join(F.broadcast(ks), ["chr_index", "pos"], "left_anti")
     return (
         novel.select(
             "rg",
@@ -5430,16 +5423,16 @@ GROUP BY chr_index
 """,
 )
 def f_ignore_table_antijoin(spark, sf_dir):
-    """F-4 at scale: ignore list as a broadcast anti-join table (the
-    form for lists too large to inline, operators/filters.py
-    filter_ignore_table)."""
+    """F-4 at scale: ignore list as a broadcast anti-join table — the
+    form for lists too large to inline as an `isin` literal (see
+    f_mapped_clean_projection); the fact table is never shuffled."""
     al = _alignments(spark, sf_dir)
     ignore = (
         load_table(spark, sf_dir, "nation")
         .filter(F.col("n_nationkey") >= 20)
         .select(F.col("n_nationkey").alias("chr_index"))
     )
-    kept = filters.filter_ignore_table(al, ignore, on="chr_index")
+    kept = al.join(F.broadcast(ignore), on="chr_index", how="left_anti")
     return kept.groupBy("chr_index").agg(F.count("*").alias("n_kept"))
 
 
@@ -6170,7 +6163,7 @@ def x_mix_temperature_weights(spark, sf_dir):
         F.sum("n_toks").cast("double").alias("t"),
         F.sum(F.col("root").cast("decimal(28,6)")).cast("double").alias("s"),
     )
-    j = attach_scalar_agg(stats, tot)
+    j = stats.withColumns(scalar_subq(tot))
     p = F.col("n_toks") / F.col("t")
     w = F.col("root") / F.col("s")
     return j.select(
@@ -7364,7 +7357,7 @@ def x_drift_chi2(spark, sf_dir):
     t = p.agg(F.sum("n_a").alias("ta"), F.sum("n_b").alias("tb"))
     e = F.col("n_a") * F.col("tb") / F.col("ta").cast("double")
     return (
-        attach_scalar_agg(p, t)
+        p.withColumns(scalar_subq(t))
         .filter(F.col("n_a") > 0)
         .select(
             "bucket",
@@ -7453,7 +7446,7 @@ def x_drift_psi(spark, sf_dir):
     pa = F.col("n_a") / F.col("ta").cast("double")
     qb = F.col("n_b") / F.col("tb").cast("double")
     return (
-        attach_scalar_agg(p, t)
+        p.withColumns(scalar_subq(t))
         .filter((F.col("n_a") > 0) & (F.col("n_b") > 0))
         .select(
             "bucket",
@@ -10265,10 +10258,10 @@ def x_mad_outliers(spark, sf_dir):
         """min+max of the two middle-ranked rows per grp (== 2*median,
         exact decimal; one row when the count is odd)."""
         rk = grouped_cumsum(
-            df.withColumn("_one", F.lit(1)),
+            df,
             group_cols=["grp"],
             order_cols=[val_col, "id"],
-            value_col="_one",
+            value_col=F.lit(1),
             out_col="rk",
         )
         mid = rk.join(F.broadcast(cnt), "grp").filter(
@@ -10593,7 +10586,7 @@ def x_assoc_rules_lift(spark, sf_dir):
     # of each join side onto basket) collapse into one. Partition count
     # is the shuffle-partitions conf (scale-adaptive, not a local
     # constant). Measured 2.7 s → 2.2 s at sf0.1, rows identical.
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     items = (
         li.select(
             F.col("l_orderkey").alias("basket"),

@@ -31,10 +31,6 @@ TABLES = (
 )
 
 
-def table_names() -> tuple[str, ...]:
-    return TABLES
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing physical quirks.
 
@@ -50,13 +46,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every table as a temp view (for the SQL API path)."""
-    dfs = load_tables(spark, sf_dir)
+    dfs = {name: load_table(spark, sf_dir, name) for name in TABLES}
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs

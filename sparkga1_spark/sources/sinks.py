@@ -31,14 +31,13 @@ def write_partitioned_sorted(
     *,
     partition_cols: Sequence[str],
     sort_cols: Sequence[str],
-    mode: str = "overwrite",
 ) -> None:
     """S-6: one directory per partition key, rows coordinate-sorted
     within every output file (SparkGA1.scala:613-651 semantics)."""
     (
         df.repartition(*[df[c] for c in partition_cols])
         .sortWithinPartitions(*partition_cols, *sort_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy(*partition_cols)
         .parquet(path)
     )
@@ -49,7 +48,6 @@ def write_single_file_ordered(
     path: str,
     *,
     order_cols: Sequence[str],
-    mode: str = "overwrite",
 ) -> None:
     """S-7: one globally ordered file (the combined-VCF contract,
     SparkGA1.scala:1241-1250). `repartition(1)` is a single-partition
@@ -57,14 +55,19 @@ def write_single_file_ordered(
     AQE leaves a by-number repartition alone); the sort then runs in the
     one writer task that already sees every row. An `orderBy` in `df`
     itself is dropped by the optimizer beneath the repartition."""
-    df.repartition(1).sortWithinPartitions(*order_cols).write.mode(mode).parquet(path)
+    (
+        df.repartition(1)
+        .sortWithinPartitions(*order_cols)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
 
 
-def checkpoint_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> DataFrame:
+def checkpoint_parquet(df: DataFrame, path: str) -> DataFrame:
     """S-4: materialize an intermediate (the bwaOut.txt manifest analog)
     and return a fresh scan over it — cuts lineage exactly like the
     reference's between-jobs file relay, but columnar and splittable."""
-    df.write.mode(mode).parquet(path)
+    df.write.mode("overwrite").parquet(path)
     # the writer's schema is known: passing it skips the footer-read
     # schema-inference job on read-back
     return df.sparkSession.read.schema(df.schema).parquet(path)
@@ -76,23 +79,18 @@ def write_bucketed_table(
     *,
     bucket_cols: Sequence[str],
     n_buckets: int,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed managed table: rows hash-partitioned into n_buckets
-    files per partition by `bucket_cols`, optionally sorted within each
-    bucket. Joins/aggregations on the bucket columns between tables
-    bucketed the same way need NO exchange — the pre-shuffle is paid
+    files per partition by `bucket_cols`. Joins/aggregations on the
+    bucket columns between tables bucketed the same way need NO
+    exchange — the pre-shuffle is paid
     once at write time (the scale answer for repeatedly-joined fact
     tables; see test_bucketed_join_avoids_shuffle for the plan proof).
 
     Bucketing metadata lives in the session catalog, so this writes a
     TABLE (spark.sql.warehouse.dir), not a bare path.
     """
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
+    df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols).saveAsTable(table)
 
 
 def compact_parquet(

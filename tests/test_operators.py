@@ -282,7 +282,6 @@ def test_fastq_to_pipeline_end_to_end(spark, sf_dir, tmp_path):
     import pandas as pd
 
     from sparkga1_spark.operators import binning
-    from sparkga1_spark.operators.transform import map_batches
     from sparkga1_spark.plans.pipeline import variant_call_stage
     from sparkga1_spark.sources import fixtures
     from sparkga1_spark.sources.catalog import load_table
@@ -313,8 +312,9 @@ def test_fastq_to_pipeline_end_to_end(spark, sf_dir, tmp_path):
             rows.append((name, int(h % 25), int(h % 999_983 + 1), int(h % 61)))
         return pd.DataFrame(rows, columns=["read_name", "chr_index", "pos", "mapq"])
 
-    aligned = map_batches(
-        reads, fn=toy_align, schema="read_name string, chr_index int, pos int, mapq int"
+    aligned = reads.mapInPandas(
+        lambda batches: map(toy_align, batches),
+        schema="read_name string, chr_index int, pos int, mapq int",
     )
     sd = fixtures.sequence_dict(load_table(spark, sf_dir, "nation"))
     binned = binning.bin_by_region(aligned, sd)
