@@ -699,6 +699,33 @@ def test_dedup_query_leaves_no_cached_blocks(spark, sf_dir):
     assert left <= before, (before, left)
 
 
+def test_recurring_queries_compile_once_per_session(spark, sf_dir):
+    """A query that runs again in the same session reuses its generated
+    classes: a second pass over the benchmark's six region queries
+    compiles nothing. Their plans generate more classes than Spark's
+    default codegen cache holds (100), and an LRU cache that is smaller
+    than a repeating cycle evicts every class before its next use."""
+    from sparkga1_spark.operators.cache import release_tracked
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+    queries = all_queries()
+    counts = []
+    for _ in range(2):
+        for name in (
+            "flagship_region_stats",
+            "p2_interval_coalesce",
+            "j_range_exome_overlap",
+            "o_global_sort_vcf",
+            "a_dedup_keep_best",
+            "p2_skew_detect",
+        ):
+            queries[name](spark, sf_dir).collect()
+            release_tracked()
+        counts.append(compiles.getCount())
+    assert counts[1] - counts[0] == 0, counts
+
+
 def test_only_session_reads_the_environment():
     """Plans depend on their inputs and the session conf alone: inside
     sparkga1_spark/ only session.py reads environment variables, and

@@ -87,6 +87,10 @@ def main() -> int:
     from sparkga1_spark.plans.registry import all_oracles, all_queries
     from sparkga1_spark.session import get_spark
 
+    # Python workers import the program too, and do not inherit sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (_REPO, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark("oracle-check")
     con = duck_connection(sf_dir)
     queries, oracles = all_queries(), all_oracles()

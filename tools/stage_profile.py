@@ -12,11 +12,12 @@ REST API
   - per-OPERATOR metrics from the SQL tab (nodeName + metrics — where
     inside one stage the time sits: scan, exchange, Python eval, join)
 
-Methodology: `get_spark` session confs, 2 warm-up passes at sf0.001,
-N timed runs at the chosen sf with release_tracked() between runs; the
-profile is read AFTER the timed runs so listener overhead sits outside
-the reported wall times (the UI listener itself adds a few percent —
-numbers here are for attribution; `perfbench/run.py` is the benchmark).
+Methodology: `get_spark`'s confs (`session.session_confs`) with the UI
+on, 2 warm-up passes at sf0.001, N timed runs at the chosen sf with
+release_tracked() between runs; the profile is read AFTER the timed
+runs so listener overhead sits outside the reported wall times (the UI
+listener itself adds a few percent — numbers here are for attribution;
+`perfbench/run.py` is the benchmark).
 
 Usage:
     python tools/stage_profile.py <query> [query ...] [--runs N] [--sf DIR]
@@ -64,22 +65,14 @@ def main() -> None:
 
     from sparkga1_spark.operators.cache import release_tracked
     from sparkga1_spark.plans.registry import all_queries
-    from sparkga1_spark.session import RUNTIME_CONFS
+    from sparkga1_spark.session import session_confs
 
     from pyspark.sql import SparkSession
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stage-profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.cleaner.periodicGC.interval", "2min")
-    )
-    for k, v in RUNTIME_CONFS.items():
+    # the session get_spark builds, with the UI (and its REST API) on
+    confs = {**session_confs(), "spark.ui.enabled": "true", "spark.ui.port": str(UI_PORT)}
+    builder = SparkSession.builder.appName("stage-profile")
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
