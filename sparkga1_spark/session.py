@@ -15,7 +15,7 @@ knob that must be exact.
 Long sessions: bounded status retention, a 2-min cleaner sweep and a
 codegen cache that holds a session's recurring plans (1000 classes,
 against 109 for the region queries, 31 for the genome run, 2986 for
-one full-registry pass and more for a tier-1 session; ~7 MB of
+one full-registry pass and 4571 for a tier-1 session; ~7 MB of
 Metaspace over Spark's 100) keep a session that runs hundreds of
 queries from growing or recompiling. All three are static confs: a
 session created elsewhere (the one handed to `__spark_entry__`) gets
@@ -114,7 +114,7 @@ def session_confs() -> dict[str, str]:
         #     benchmark 109 classes (80 recompiled per warm run at
         #     100), wgs_hotspot 31, one full-registry pass at sf0.01
         #     2986 (4467 compiles at 100, 3243 at 1000), a tier-1
-        #     session over 1000 (9971 compiles at 100, 6688 at 1000).
+        #     session 4571 (9971 compiles at 100, 6688 at 1000).
         #     1000 entries cost ~7 MB of Metaspace over 100 (202 vs 195
         #     MB after that pass; holding all 2986 took 219 MB). The
         #     conf is static: a foreign session handed to
